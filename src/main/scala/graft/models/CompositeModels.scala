@@ -199,10 +199,6 @@ object CompositeModels {
       activeAccountsAppFromGrid(appActivityGrid(spark, sfDir), 29)
     }
 
-  /** Frame-parameterized variant for the model registry. */
-  def monthlyActiveAccountsFrom(factIn: DataFrame): DataFrame =
-    activeAccountsAppFrom(factIn, 29)
-
   /** q42: 7-day rolling per-app actives —
     * `weekly_active_accounts_app.sql` (the grid cell q34/q40 don't
     * cover; daily=q40 legs, monthly=q34). */

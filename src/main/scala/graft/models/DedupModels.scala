@@ -514,8 +514,9 @@ object DedupModels {
     * explode+md5 runs once; frame-parameterized callers (specs, the
     * pipeline's batch-grain incremental leg) pay a second scan of
     * their — batch-sized or already-persisted — input instead.
-    * SkewBench measures the two shapes head-to-head on a hot-key
-    * fixture (`skew_bench.json`). */
+    * The two shapes were measured head-to-head on a hot-key fixture
+    * (`bench_runs/skew_bench.json`, COVERAGE.md "Content-hash
+    * windows, measured"); PlanAuditSpec pins the window ban. */
   private[graft] def markFirstOccurrence(segs: DataFrame): DataFrame = {
     import segs.sparkSession.implicits._
     val firsts = segs.groupBy($"seg_hash")
@@ -524,9 +525,6 @@ object DedupModels {
       .withColumn("dup", struct($"doc_id", $"g") =!= $"first_occ")
       .drop("first_occ")
   }
-
-  def segmentDedupFrom(docs: DataFrame): DataFrame =
-    segmentStatsOf(markFirstOccurrence(segmentsOf(docs)))
 
   def segmentDedup(spark: SparkSession, sfDir: String): DataFrame =
     segmentStatsOf(markFirstOccurrence(segmentStream(spark, sfDir)))
@@ -651,8 +649,8 @@ object DedupModels {
     // (session-temp parquet, shared with d11) keeps the corpus scan +
     // gram explode single-pass across the count and probe branches
     // without executor-cache state (the agg and probe subplans differ,
-    // so exchange reuse alone would re-scan + re-md5). SkewBench pits
-    // both shapes against a hot-key fixture (`skew_bench.json`).
+    // so exchange reuse alone would re-scan + re-md5). Both shapes were
+    // measured on a hot-key fixture (`bench_runs/skew_bench.json`).
     val grams = spanGramStream(spark, sfDir)
     val dupg = grams.groupBy($"g")
       .agg(count(lit(1)).as("cnt"))

@@ -1,9 +1,10 @@
 package graft.runner
 
 import java.time.LocalDate
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.types.StructType
 
 /** Cadence of an incremental model — the reference's `incremental_epoch_dict`
   * (`kin-data-pipeline/execute_snowflake_load.py:45-49`).
@@ -62,11 +63,17 @@ final case class ModelDef(
   *  4. `today` is an injected parameter, never the wall clock
   *     (SURVEY.md §7.4 trap 1).
   *
-  * Scale: targets are parquet directories partitioned by `date_key`, so
-  * the watermark probe reads only the partition listing + footer stats and
-  * the incremental predicate prunes partitions on read. Repair rewrites
-  * only the partitions at/after the cut date (dynamic partition overwrite),
-  * not the whole table.
+  * Scale: targets are parquet directories partitioned by `date_key`. The
+  * watermark is one `max(date_key)` job over the target: `date_key` is
+  * the partition column, so no data column is decoded, but the job still
+  * lists every partition and opens every file, so its cost grows with
+  * the table's file count. The incremental predicate prunes partitions
+  * on read. Repair drops only the partition directories at/after the
+  * cut date, never a table rewrite.
+  *
+  * Every probe, delete and rename goes through the target path's Hadoop
+  * `FileSystem` (the [[SwapWrite]] posture), so a warehouse given as a
+  * URI (`file://`, `hdfs://`, an object store) behaves like a bare path.
   */
 final class IncrementalRunner(
     spark: SparkSession,
@@ -85,41 +92,29 @@ final class IncrementalRunner(
 
   def targetPath(name: String): String = s"$warehouseDir/$name"
 
-  def exists(name: String): Boolean =
-    new java.io.File(targetPath(name)).exists()
+  private def fsPath(p: String): (FileSystem, Path) = {
+    val path = new Path(p)
+    (path.getFileSystem(spark.sparkContext.hadoopConfiguration), path)
+  }
+
+  def exists(name: String): Boolean = {
+    val (fs, p) = fsPath(targetPath(name))
+    fs.exists(p)
+  }
 
   def readModel(name: String): DataFrame =
     spark.read.parquet(targetPath(name))
 
   /** High watermark = max(date_key) already in the target. */
   def watermark(name: String): String =
-    if (!exists(name)) Epoch
-    else {
-      val row = readModel(name).agg(max($"date_key").cast("string")).head()
-      if (row.isNullAt(0)) Epoch else row.getString(0)
-    }
+    if (!exists(name)) Epoch else lastKey(readModel(name)).getOrElse(Epoch)
 
-  /** Rows of `df` above the watermark and inside closed periods only. */
-  private def incrementalSlice(df: DataFrame, m: ModelDef): DataFrame = {
-    val wm = watermark(m.name)
-    df.filter(
-      date_trunc(m.cadence.truncUnit, $"date_key").cast("date") > lit(wm) &&
-        $"date_key" <
-          date_trunc(m.cadence.truncUnit, lit(today.toString)).cast("date"))
+  /** max(date_key) of a read target; None when it holds no row. */
+  private def lastKey(target: DataFrame): Option[String] = {
+    val row = target.agg(max($"date_key").cast("string")).head()
+    if (row.isNullAt(0)) None else Some(row.getString(0))
   }
 
-  /** Incremental run: append only the new closed-period slice. Returns the
-    * number of appended rows. A full build happens implicitly on first run
-    * (watermark = epoch).
-    *
-    * The slice plan executes ONCE: it is persisted before the count, so
-    * the write streams from the persisted copy instead of re-running the
-    * whole model build (count-then-write on the raw plan doubles the cost
-    * of every model run — this is the production path).
-    * MEMORY_AND_DISK: a day-slice that outgrows executor storage spills
-    * instead of evicting (eviction would silently re-execute the build).
-    * `IncrementalRunnerSpec` pins single execution with an accumulator.
-    */
   /** Fail-loud schema-drift guard: an edited model whose output no
     * longer matches its materialized target must not silently append
     * mixed-schema files (parquet would take them and readers would then
@@ -129,10 +124,10 @@ final class IncrementalRunner(
     * (partition columns read back last) and nullability is
     * write-path-dependent; names/types are the contract. Re-shaping a
     * model requires `repair` from the epoch or a fullRefresh — both
-    * rewrite the table.
+    * rewrite the table. `target` is None before the first write.
     */
-  private def requireSchemaMatch(m: ModelDef,
-      slice: org.apache.spark.sql.types.StructType): Unit = {
+  private def requireSchemaMatch(m: ModelDef, slice: StructType,
+      target: Option[StructType]): Unit = {
     // duplicate output column names collapse in the name→type map and
     // would slip past the drift compare, only to fail (or append
     // ambiguous parquet) at write time — reject them first, by name
@@ -143,74 +138,86 @@ final class IncrementalRunner(
         s"model ${m.name}: output has duplicate column name(s) " +
           s"[${dups.mkString(", ")}] — every materialized column must " +
           "be uniquely named")
-    if (!exists(m.name)) return
-    val target = readModel(m.name).schema
-    val (a, b) = (slice.map(f => f.name -> f.dataType).toMap,
-      target.map(f => f.name -> f.dataType).toMap)
-    if (a != b) {
-      val drift = (a.keySet ++ b.keySet).toSeq.sorted.flatMap { c =>
-        (a.get(c), b.get(c)) match {
-          case (Some(x), Some(y)) if x != y => Some(s"$c: $y -> $x")
-          case (Some(x), None) => Some(s"$c: ADDED ($x)")
-          case (None, Some(y)) => Some(s"$c: REMOVED (was $y)")
-          case _ => None
+    target.foreach { t =>
+      val (a, b) = (slice.map(f => f.name -> f.dataType).toMap,
+        t.map(f => f.name -> f.dataType).toMap)
+      if (a != b) {
+        val drift = (a.keySet ++ b.keySet).toSeq.sorted.flatMap { c =>
+          (a.get(c), b.get(c)) match {
+            case (Some(x), Some(y)) if x != y => Some(s"$c: $y -> $x")
+            case (Some(x), None) => Some(s"$c: ADDED ($x)")
+            case (None, Some(y)) => Some(s"$c: REMOVED (was $y)")
+            case _ => None
+          }
         }
+        throw new IllegalStateException(
+          s"model ${m.name}: output schema drifted from the materialized " +
+            s"target [${drift.mkString("; ")}] — repair from the epoch or " +
+            "mark the model fullRefresh to rebuild it")
       }
-      throw new IllegalStateException(
-        s"model ${m.name}: output schema drifted from the materialized " +
-          s"target [${drift.mkString("; ")}] — repair from the epoch or " +
-          "mark the model fullRefresh to rebuild it")
     }
   }
 
+  /** Incremental run: append only the new closed-period slice. Returns the
+    * number of appended rows. A full build happens implicitly on first run
+    * (watermark = epoch). The target is read once: its schema feeds the
+    * drift guard and its `max(date_key)` the watermark. A target with no
+    * row (absent, or the empty marker) is overwritten instead of appended
+    * to, which clears the marker's flat file.
+    */
   def runIncremental(m: ModelDef, resolve: String => DataFrame): Long = {
     val built = m.build(spark, resolve)
-    requireSchemaMatch(m, built.schema)
-    val slice = incrementalSlice(built, m)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = slice.count()
-      if (n > 0) {
-        clearEmptyMarker(m.name)
-        rebalanced(slice, m.clusterBy).write.mode(SaveMode.Append)
-          .partitionBy("date_key").parquet(targetPath(m.name))
-      } else if (!exists(m.name))
-        // the reference's CTAS always creates the table; materialize an
-        // empty schema-bearing target so downstream models can resolve it
-        // (unpartitioned: a partitioned empty write emits no files)
-        slice.write.mode(SaveMode.Overwrite).parquet(targetPath(m.name))
-      n
-    } finally slice.unpersist()
-  }
-
-  /** An existing target with NO `date_key=` partition directories can
-    * only be the empty schema-bearing marker (every data write is
-    * partitioned) — drop its root-level files before the first real
-    * append, or the mixed flat/partitioned layout breaks partition
-    * discovery on read. */
-  private def clearEmptyMarker(name: String): Unit = {
-    val root = new java.io.File(targetPath(name))
-    val files = Option(root.listFiles()).getOrElse(Array.empty)
-    if (files.nonEmpty && !files.exists(f =>
-        f.isDirectory && f.getName.startsWith("date_key=")))
-      files.foreach { f =>
-        if (!f.isDirectory) f.delete(): Unit
-      }
+    val target = if (exists(m.name)) Some(readModel(m.name)) else None
+    requireSchemaMatch(m, built.schema, target.map(_.schema))
+    val last = target.flatMap(lastKey)
+    write(m, built.filter(date_trunc(m.cadence.truncUnit, $"date_key")
+      .cast("date") > lit(last.getOrElse(Epoch))),
+      if (last.isEmpty) SaveMode.Overwrite else SaveMode.Append)
   }
 
   /** Full refresh: CTAS equivalent (`execute_snowflake_load.py:90-91`) —
     * closed-period gate still applies; watermark does not.
     */
-  def runFullRefresh(m: ModelDef, resolve: String => DataFrame): Long = {
-    val df = m.build(spark, resolve).filter(
-      $"date_key" <
-        date_trunc(m.cadence.truncUnit, lit(today.toString)).cast("date"))
-    val out = df.cache()
-    val n = out.count()
-    rebalanced(out, m.clusterBy).write.mode(SaveMode.Overwrite)
-      .partitionBy("date_key").parquet(targetPath(m.name))
-    out.unpersist()
+  def runFullRefresh(m: ModelDef, resolve: String => DataFrame): Long =
+    write(m, m.build(spark, resolve), SaveMode.Overwrite)
+
+  /** The one model write: gate `df` to closed periods and write it once,
+    * partitioned by `date_key`. The row count rides on the write itself
+    * (`Dataset.observe`), so the model build executes exactly once with
+    * no executor cache (`IncrementalRunnerSpec` pins this with an
+    * accumulator). An `Observation` is single-use, hence one per call.
+    * A write of zero rows reports no metric at all (an empty map, not
+    * `n -> 0`), so an absent count reads as 0.
+    */
+  private def write(m: ModelDef, df: DataFrame, mode: SaveMode): Long = {
+    val closed = df.filter($"date_key" <
+      date_trunc(m.cadence.truncUnit, lit(today.toString)).cast("date"))
+    val rows = Observation()
+    rebalanced(closed.observe(rows, count(lit(1)).as("n")), m.clusterBy)
+      .write.mode(mode).partitionBy("date_key").parquet(targetPath(m.name))
+    val n = rows.get.get("n").fold(0L)(_.asInstanceOf[Long])
+    if (n == 0) markIfEmpty(m.name, closed.schema)
     n
+  }
+
+  /** The empty-target rule, run after every zero-row write and after a
+    * repair that drops every partition: a target that holds no data file is unreadable (partitioned writes of zero
+    * rows leave only `_SUCCESS`, and schema inference then fails), so
+    * replace it with a flat, schema-bearing, zero-row marker — the
+    * reference's CTAS always creates the table, and downstream models
+    * and `registerViews` must resolve it. The next write with rows
+    * overwrites the marker (`runIncremental` sees no row in it). */
+  private def markIfEmpty(name: String, schema: StructType): Unit = {
+    val (fs, root) = fsPath(targetPath(name))
+    val files = fs.listFiles(root, true) // every write leaves the root
+    var hasData = false
+    while (!hasData && files.hasNext) {
+      val f = files.next().getPath.getName
+      hasData = f.endsWith(".parquet") && !f.startsWith(".")
+    }
+    if (!hasData)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+        .write.mode(SaveMode.Overwrite).parquet(root.toString)
   }
 
   /** File-layout guard for the `partitionBy("date_key")` writes: without
@@ -239,9 +246,7 @@ final class IncrementalRunner(
       // entries are parsed as expressions so the engine's native sort
       // keys (zorder_key) work; a bare column name parses to itself
       graft.functions.GraftFunctions.register(spark)
-      hinted.sortWithinPartitions(
-        org.apache.spark.sql.functions.col("date_key") +:
-          clusterBy.map(org.apache.spark.sql.functions.expr): _*)
+      hinted.sortWithinPartitions(col("date_key") +: clusterBy.map(expr): _*)
     }
   }
 
@@ -263,45 +268,34 @@ final class IncrementalRunner(
     */
   def repair(m: ModelDef, cutoff: LocalDate): Boolean = {
     if (m.appendOnly || !exists(m.name)) return false
-    val cut = cutoff
     val truncated = m.cadence match {
-      case Cadence.Daily => cut
-      case Cadence.Weekly => cut.minusDays((cut.getDayOfWeek.getValue - 1).toLong)
-      case Cadence.Monthly => cut.withDayOfMonth(1)
+      case Cadence.Daily => cutoff
+      case Cadence.Weekly =>
+        cutoff.minusDays((cutoff.getDayOfWeek.getValue - 1).toLong)
+      case Cadence.Monthly => cutoff.withDayOfMonth(1)
     }
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rmrf)
-      f.delete(): Unit
+    val (fs, root) = fsPath(targetPath(m.name))
+    // the empty schema-bearing marker has no partition dir, so nothing
+    // is doomed and the repair reports false
+    val allPartDirs = fs.listStatus(root).collect {
+      case s if s.isDirectory && s.getPath.getName.startsWith("date_key=") =>
+        s.getPath
     }
-    val root = new java.io.File(targetPath(m.name))
-    val allPartDirs = Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("date_key="))
-    // a target with zero partition dirs is the empty schema-bearing
-    // marker — nothing to delete, report no repair happened
-    if (allPartDirs.isEmpty) return false
     // tolerate partition values that aren't ISO dates (a null date_key's
     // __HIVE_DEFAULT_PARTITION__, or externally-written dirs): they can
     // never be ≥ a date cutoff, so skip them instead of aborting the
     // whole registry-wide cleanup on an unparseable name
-    val partDirs = allPartDirs.flatMap { d =>
-      scala.util.Try(
-        LocalDate.parse(d.getName.stripPrefix("date_key=")))
-        .toOption.map(d -> _)
-    }
-    val doomed = partDirs.collect {
-      case (d, date) if !date.isBefore(truncated) => d
-    }
+    val doomed = allPartDirs.filter(p => scala.util.Try(
+      LocalDate.parse(p.getName.stripPrefix("date_key="))).toOption
+      .exists(!_.isBefore(truncated)))
     if (doomed.isEmpty) return false
-    if (doomed.length == allPartDirs.length) {
-      // repair empties the table: a partition dir with no data files is
-      // unreadable, so fall back to a schema-bearing empty target (the
-      // same shape runIncremental's empty first run writes)
-      val schema = readModel(m.name).schema
-      doomed.foreach(rmrf)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        .write.mode(SaveMode.Overwrite).parquet(targetPath(m.name))
-    } else doomed.foreach(rmrf)
+    // repair that empties the table falls back to the empty marker; its
+    // schema must be read before the last partition goes
+    val schema =
+      if (doomed.length == allPartDirs.length) Some(readModel(m.name).schema)
+      else None
+    doomed.foreach(fs.delete(_, true))
+    schema.foreach(markIfEmpty(m.name, _))
     true
   }
 
@@ -310,100 +304,45 @@ final class IncrementalRunner(
     * directories don't). Chunked backfills, repair-refills and skewed
     * rebalance splits leave a `date_key=` partition holding many small
     * files; at 100 TB a years-deep table then pays a real tax in file
-    * listings, footer reads and one-tiny-task-per-file scans. For each
-    * partition whose data-file count exceeds ⌈bytes / targetFileBytes⌉,
-    * rewrite JUST that partition's files into the target count and swap
-    * them in place — logically idempotent (row-identical, pinned by
+    * listings, footer reads and one-tiny-task-per-file scans. Each
+    * partition directory is flat, so it is folded by
+    * [[Compaction.compactFlat]] — the [[SwapWrite]] rename-swap —
+    * when its data-file count exceeds ⌈bytes / targetFileBytes⌉:
+    * logically idempotent (row-identical, pinned by
     * IncrementalRunnerSpec) and O(oversplit partitions), never a table
-    * rewrite. Partitions already at or under the target are not touched
-    * (their files stay bit-identical).
+    * rewrite. Partitions already at or under the target are not
+    * rewritten (their files stay bit-identical).
     *
-    * Single-writer contract, like every mutation here: the swap
-    * (delete old files, move rewritten ones in) is not atomic for
-    * concurrent readers. It IS crash-recoverable: the rewrite lands in
-    * a dot-prefixed (reader-invisible) tmp dir first, and the next
-    * sweep finishes or discards an interrupted swap by looking at
-    * which side still holds the partition's data files
-    * (IncrementalRunnerSpec pins both recovery branches).
+    * Crash recovery is [[SwapWrite.recover]]'s, run per partition. A
+    * partition killed mid-swap has no live `date_key=` directory — its
+    * only copy is the `.swap-date_key=…` sibling — so the sweep also
+    * visits the partitions named by that residue. Residue of the
+    * retired per-file-move protocol (`.compact-date_key=…`) is not
+    * recovered: the sweep refuses it, naming the directory.
+    * Single-writer contract, like every mutation here: the swap is
+    * crash-recoverable, not atomic for concurrent readers.
     *
     * Returns partitionDir -> resulting file count for each compacted
     * partition.
     */
   def compact(name: String,
       targetFileBytes: Long = 128L * 1024 * 1024): Map[String, Int] = {
-    val root = new java.io.File(targetPath(name))
-    if (!root.exists()) return Map.empty
-    // recover crash residue first. A `.compact-*` dir (dot-prefixed →
-    // invisible to readers) left by a killed sweep means one of two
-    // states, distinguished by whether its partition still has data
-    // files: (a) crash before the old files were deleted → the tmp is a
-    // dead duplicate, drop it; (b) crash after the delete → the tmp
-    // holds the partition's ONLY copy, finish the interrupted move.
-    Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith(".compact-"))
-      .foreach { tmp =>
-        val part = new java.io.File(root, tmp.getName.stripPrefix(".compact-"))
-        val partHasData = part.isDirectory && part.listFiles()
-          .exists(f => f.isFile && f.getName.endsWith(".parquet"))
-        if (!partHasData && tmp.listFiles()
-            .exists(f => f.isFile && f.getName.endsWith(".parquet")))
-          moveDataFiles(tmp, part)
-        tmp.listFiles().foreach(f => f.delete(): Unit)
-        tmp.delete(): Unit
-      }
-    val partDirs = Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("date_key="))
-    partDirs.flatMap { d =>
-      val dataFiles = d.listFiles()
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      val want = math.max(1, math.ceil(
-        dataFiles.map(_.length).sum.toDouble / targetFileBytes).toInt)
-      if (dataFiles.length <= want) None
-      else {
-        // read ONLY this partition's files — the partition value lives in
-        // the directory name, not the files, so the rewritten files keep
-        // the exact column set of the originals. coalesce, not
-        // repartition: a file merge needs no shuffle.
-        val df = spark.read.parquet(d.getAbsolutePath)
-        val tmp = new java.io.File(root, s".compact-${d.getName}")
-        df.coalesce(want).write.mode(SaveMode.Overwrite)
-          .parquet(tmp.getAbsolutePath)
-        dataFiles.foreach { f =>
-          val crc = new java.io.File(f.getParentFile, s".${f.getName}.crc")
-          if (crc.exists()) crc.delete(): Unit
-          f.delete(): Unit
-        }
-        val moved = moveDataFiles(tmp, d)
-        tmp.listFiles().foreach(f => f.delete(): Unit)
-        tmp.delete(): Unit
-        Some(d.getName -> moved)
-      }
-    }.toMap
-  }
-
-  /** Move every parquet data file (and its checksum sibling) from `src`
-    * into `dest`; returns the count. Writer-generated names carry task
-    * UUIDs, so moves never clash with surviving files. */
-  private def moveDataFiles(src: java.io.File, dest: java.io.File): Int = {
-    if (!dest.exists()) dest.mkdirs(): Unit
-    val files = src.listFiles().filter(f =>
-      f.isFile && f.getName.endsWith(".parquet"))
-    files.foreach { f =>
-      require(f.renameTo(new java.io.File(dest, f.getName)),
-        s"compact: could not move $f into $dest")
-      val crc = new java.io.File(src, s".${f.getName}.crc")
-      if (crc.exists())
-        crc.renameTo(new java.io.File(dest, crc.getName)): Unit
+    val (fs, root) = fsPath(targetPath(name))
+    if (!fs.exists(root)) return Map.empty
+    val dirs = fs.listStatus(root).filter(_.isDirectory).map(_.getPath.getName)
+    dirs.find(_.startsWith(".compact-")).foreach { d =>
+      throw new IllegalStateException(
+        s"compact: $root/$d is residue of the retired per-file-move " +
+          "compaction, which this sweep does not recover — reconcile it " +
+          "by hand (its files may be the partition's only copy)")
     }
-    files.length
+    dirs.collect {
+      case d if d.startsWith("date_key=") => d
+      case d if d.startsWith(".swap-date_key=") =>
+        d.stripPrefix(".swap-").stripSuffix("-old")
+    }.distinct.sorted.flatMap(p => Compaction.compactFlat(spark,
+      s"$root/$p", targetFileBytes).map(p -> _)).toMap
   }
-
-  /** Registry-wide compaction sweep — run after the scheduled pipelines
-    * the way `cleanupFromDate` runs the cleanup manifest. */
-  def compactAll(models: Seq[ModelDef],
-      targetFileBytes: Long = 128L * 1024 * 1024): Map[String, Int] =
-    models.flatMap(m => compact(m.name, targetFileBytes)
-      .map { case (p, n) => s"${m.name}/$p" -> n }).toMap
 
   /** Kahn topological order over declared deps (only deps that are
     * themselves models count; raw sources resolve outside the DAG).
@@ -426,38 +365,6 @@ final class IncrementalRunner(
     require(out.size == models.size,
       s"cycle among models: ${models.map(_.name).diff(out.map(_.name).toSeq)}")
     out.toSeq
-  }
-
-  /** Run the whole DAG incrementally in dependency order, then publish
-    * the zero-copy clones. A model's resolver serves upstream models from
-    * their materialized targets (the reference reads prior models' tables
-    * the same way) and anything else from `sources`.
-    *
-    * `clones` mirrors the reference's clone-vs-model branch
-    * (`execute_snowflake_load.py:94-96`): after the models build, each
-    * (cloneName → sourceModel) pair is published as a metadata-only view
-    * over the source's materialized files (S4 — Snowflake
-    * `CREATE TABLE … CLONE` analog), resolvable via
-    * `spark.table(cloneName)`.
-    */
-  /** Run only the models of one cadence — the reference's weekly /
-    * monthly pipeline manifests (`sf_weekly_pipeline.yaml`,
-    * `sf_monthly_pipeline.yaml` glob only `{weekly,monthly}_models/`).
-    * Upstream models owned by OTHER cadences resolve from their
-    * materialized warehouse targets, exactly as the reference's weekly
-    * SQL reads tables the daily pipeline built.
-    */
-  def runCadence(all: Seq[ModelDef], cadence: Cadence,
-      sources: String => DataFrame): Map[String, Long] = {
-    val byName = all.map(m => m.name -> m).toMap
-    val resolve: String => DataFrame = name =>
-      if (byName.contains(name)) readModel(name) else sources(name)
-    topoOrder(all).filter(_.cadence == cadence).map { m =>
-      val n = if (m.fullRefresh) runFullRefresh(m, resolve)
-        else runIncremental(m, resolve)
-      spark.catalog.clearCache()
-      m.name -> n
-    }.toMap
   }
 
   /** Registry-wide repair — the reference's incremental-cleanup
@@ -484,12 +391,51 @@ final class IncrementalRunner(
         case n if exists(n) => n -> targetPath(n)
       })
 
+  /** Run the whole DAG in dependency order — each model incrementally,
+    * or as a full refresh if it is declared one — then publish the
+    * zero-copy clones. Returns rows written per model.
+    *
+    * `clones` mirrors the reference's clone-vs-model branch
+    * (`execute_snowflake_load.py:94-96`): after the models build, each
+    * (cloneName → sourceModel) pair is published as a metadata-only view
+    * over the source's materialized files (S4 — Snowflake
+    * `CREATE TABLE … CLONE` analog), resolvable via
+    * `spark.table(cloneName)`.
+    */
   def runAll(models: Seq[ModelDef],
       sources: String => DataFrame,
       clones: Seq[(String, String)] = Nil): Map[String, Long] = {
+    val counts = runModels(models, _ => true, sources)
+    clones.foreach { case (cloneName, src) =>
+      require(models.exists(_.name == src),
+        s"clone $cloneName references unregistered model $src")
+      graft.catalog.Tables.registerClone(spark, cloneName, targetPath(src))
+    }
+    counts
+  }
+
+  /** [[runAll]]'s loop restricted to one cadence, without clones — the
+    * reference's weekly / monthly pipeline manifests
+    * (`sf_weekly_pipeline.yaml`, `sf_monthly_pipeline.yaml` glob only
+    * `{weekly,monthly}_models/`). Upstream models owned by OTHER
+    * cadences resolve from their materialized warehouse targets,
+    * exactly as the reference's weekly SQL reads tables the daily
+    * pipeline built.
+    */
+  def runCadence(all: Seq[ModelDef], cadence: Cadence,
+      sources: String => DataFrame): Map[String, Long] =
+    runModels(all, _.cadence == cadence, sources)
+
+  /** Run the models of `dag` that pass `select`, in topological order. A
+    * model's resolver serves every model of `dag` from its materialized
+    * target (the reference reads prior models' tables the same way) and
+    * anything else from `sources`. */
+  private def runModels(dag: Seq[ModelDef], select: ModelDef => Boolean,
+      sources: String => DataFrame): Map[String, Long] = {
+    val names = dag.map(_.name).toSet
     val resolve: String => DataFrame = name =>
-      if (models.exists(_.name == name)) readModel(name) else sources(name)
-    val counts = topoOrder(models).map { m =>
+      if (names(name)) readModel(name) else sources(name)
+    topoOrder(dag).filter(select).map { m =>
       val n = if (m.fullRefresh) runFullRefresh(m, resolve)
         else runIncremental(m, resolve)
       // builder-internal caches can't be reused across models (downstream
@@ -498,11 +444,5 @@ final class IncrementalRunner(
       spark.catalog.clearCache()
       m.name -> n
     }.toMap
-    clones.foreach { case (cloneName, src) =>
-      require(models.exists(_.name == src),
-        s"clone $cloneName references unregistered model $src")
-      graft.catalog.Tables.registerClone(spark, cloneName, targetPath(src))
-    }
-    counts
   }
 }

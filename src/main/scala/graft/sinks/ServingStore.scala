@@ -58,8 +58,12 @@ final class ParquetServingStore(spark: SparkSession, servingDir: String)
 
   override def location(table: String): String = s"$servingDir/$table"
 
-  override def exists(table: String): Boolean =
-    new java.io.File(location(table)).exists()
+  /** Probed through the Hadoop `FileSystem`, so a serving dir given as a
+    * URI (`file://`, `hdfs://`) is found like a bare path. */
+  override def exists(table: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(location(table))
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
 
   override def watermark(table: String, col: String): Option[String] =
     if (!exists(table)) None

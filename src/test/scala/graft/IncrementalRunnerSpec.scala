@@ -149,27 +149,45 @@ class IncrementalRunnerSpec extends AnyFunSuite {
     val day2 = new java.io.File(root, "date_key=2024-01-02")
     def dataFiles(d: java.io.File) =
       d.listFiles().filter(f => f.isFile && f.getName.endsWith(".parquet"))
-    // crash state (a): tmp written, old files NOT yet deleted -> the tmp
-    // is a dead duplicate the next sweep must drop, keeping the originals
-    val tmp1 = new java.io.File(root, s".compact-${day1.getName}")
+    // pre-swap crash: SwapWrite's rewrite sits in `.swap-<partition>` but
+    // the live partition was never moved -> the tmp is a dead duplicate
+    // the next sweep must drop, keeping the originals
+    val tmp1 = new java.io.File(root, s".swap-${day1.getName}")
     spark.read.parquet(day1.getAbsolutePath).coalesce(1)
       .write.parquet(tmp1.getAbsolutePath)
-    // crash state (b): old files deleted, move not done -> the tmp holds
-    // the only copy and the next sweep must finish the move
-    val tmp2 = new java.io.File(root, s".compact-${day2.getName}")
+    // mid-swap crash: the live partition was moved aside to `-old` and
+    // the rewrite not yet renamed in -> no live `date_key=` dir remains,
+    // the tmp is the current copy and the sweep must finish the swap
+    val tmp2 = new java.io.File(root, s".swap-${day2.getName}")
     spark.read.parquet(day2.getAbsolutePath).coalesce(1)
       .write.parquet(tmp2.getAbsolutePath)
-    dataFiles(day2).foreach(f => assert(f.delete()))
+    val old2 = new java.io.File(root, s".swap-${day2.getName}-old")
+    assert(day2.renameTo(old2) && !day2.exists())
     r.compact("crashy")
-    assert(!tmp1.exists() && !tmp2.exists())
-    // state (a): the duplicate tmp was DROPPED (row multiset unchanged —
-    // the check below would see doubled day-1 rows had it been moved in),
+    assert(!tmp1.exists() && !tmp2.exists() && !old2.exists())
+    // pre-swap: the duplicate was DROPPED (row multiset unchanged — the
+    // check below would see doubled day-1 rows had it been moved in),
     // then the sweep compacted the surviving originals as usual;
-    // state (b): the move was finished, restoring day 2's only copy
+    // mid-swap: the swap finished forward, restoring day 2's live dir
     assert(dataFiles(day1).length == 1)
-    assert(dataFiles(day2).length == 1, "move finished in state (b)")
+    assert(dataFiles(day2).length == 1, "swap finished in the mid-swap state")
     val after = r.readModel("crashy").collect().toSeq.map(_.toSeq).sortBy(_.toString)
     assert(after == before)
+  }
+
+  test("compact refuses residue of the retired per-file-move protocol") {
+    val wh = tmpDir()
+    val r = new IncrementalRunner(spark, wh, LocalDate.parse("2024-01-11"))
+    val path = r.targetPath("legacy")
+    sourceDf(2).write.partitionBy("date_key").parquet(path)
+    // that protocol's tmp may hold a partition's only copy: the sweep
+    // must name it and stop, never drop or guess
+    val stale = new java.io.File(path, ".compact-date_key=2024-01-01")
+    spark.read.parquet(s"$path/date_key=2024-01-01")
+      .write.parquet(stale.getAbsolutePath)
+    val e = intercept[IllegalStateException](r.compact("legacy"))
+    assert(e.getMessage.contains(".compact-date_key=2024-01-01"))
+    assert(stale.exists())
   }
 
   test("clusterBy orders rows within each written file (zone-map contract)") {
@@ -431,6 +449,66 @@ class IncrementalRunnerSpec extends AnyFunSuite {
     assert(n == 5)
     assert(acc.value == 1L,
       s"model build executed ${acc.value} times, expected exactly once")
+    // a full refresh whose closed-period result is empty (no January
+    // month is closed on Jan 6) also executes once, and leaves a
+    // readable zero-row target rather than a bare `_SUCCESS`
+    val monthly = ModelDef("monthly_totals", Cadence.Monthly, Seq("events_src"),
+      (_, resolve) => resolve("events_src")
+        .groupBy($"date_key").agg(sum($"amount").as("total")),
+      fullRefresh = true)
+    acc.reset()
+    assert(r.runFullRefresh(monthly, _ => src) == 0)
+    assert(acc.value == 1L,
+      s"full refresh executed ${acc.value} times, expected exactly once")
+    assert(r.readModel("monthly_totals").count() == 0)
+  }
+
+  test("an empty full refresh leaves a readable target for its dependents") {
+    // a monthly snapshot is empty whenever `today` falls in the first
+    // month of data: no month is closed yet
+    val wh = tmpDir()
+    val snapshot = ModelDef("monthly_snapshot", Cadence.Monthly,
+      Seq("events_src"),
+      (_, resolve) => resolve("events_src")
+        .groupBy(date_trunc("month", $"date_key").cast("date").as("date_key"))
+        .agg(sum($"amount").as("total")),
+      fullRefresh = true)
+    val derived = ModelDef("snapshot_doubled", Cadence.Daily,
+      Seq("monthly_snapshot"),
+      (_, resolve) => resolve("monthly_snapshot")
+        .select($"date_key", ($"total" * 2).as("doubled")))
+    val dag = Seq(derived, snapshot)
+    val r = new IncrementalRunner(spark, wh, LocalDate.parse("2024-01-15"))
+    assert(r.runAll(dag, _ => sourceDf(10)) ==
+      Map("monthly_snapshot" -> 0L, "snapshot_doubled" -> 0L))
+    assert(r.registerViews(dag).toSet ==
+      Set("monthly_snapshot", "snapshot_doubled"))
+    val snap = spark.table("monthly_snapshot")
+    assert(snap.count() == 0)
+    assert(snap.columns.toSet == Set("date_key", "total"))
+    assert(spark.table("snapshot_doubled").columns.toSet ==
+      Set("date_key", "doubled"))
+    // once January closes, both fill over their empty markers
+    val next = new IncrementalRunner(spark, wh, LocalDate.parse("2024-02-01"))
+    assert(next.runAll(dag, _ => sourceDf(10)) ==
+      Map("monthly_snapshot" -> 1L, "snapshot_doubled" -> 1L))
+    assert(next.readModel("snapshot_doubled").count() == 1)
+  }
+
+  test("a file:// warehouse URI appends once, repairs and publishes views") {
+    val wh = s"file://${tmpDir()}"
+    val m = dailyModel(() => sourceDf(10))
+    val r = new IncrementalRunner(spark, wh, LocalDate.parse("2024-01-09"))
+    assert(r.runAll(Seq(m), _ => sourceDf(10)) == Map("daily_totals" -> 8L))
+    // the same `today` again: the watermark holds, nothing re-appends
+    assert(r.runAll(Seq(m), _ => sourceDf(10)) == Map("daily_totals" -> 0L))
+    assert(r.readModel("daily_totals").count() == 8)
+    assert(r.watermark("daily_totals") == "2024-01-08")
+    assert(r.cleanupFromDate(Seq(m), LocalDate.parse("2024-01-05")) ==
+      Map("daily_totals" -> true))
+    assert(r.watermark("daily_totals") == "2024-01-04")
+    assert(r.registerViews(Seq(m)) == Seq("daily_totals"))
+    assert(spark.table("daily_totals").count() == 4)
   }
 
   test("weekly cadence gates on complete weeks") {

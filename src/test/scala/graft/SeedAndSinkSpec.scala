@@ -156,6 +156,19 @@ class SeedAndSinkSpec extends AnyFunSuite {
     assert(spark.read.parquet(rep.sinkPath("daily_summary")).count() == 2)
   }
 
+  test("S7: a file:// serving dir appends only past its sink watermark") {
+    val serving = "file://" +
+      Files.createTempDirectory("graft-serving").toString
+    val rep = new Replicator(spark, serving)
+    def src(days: Int) = (1 to days).map(d =>
+      (f"2024-01-$d%02d", d.toLong, d * 10L))
+      .toDF("dk", "app_id", "total_amount")
+      .select(to_date($"dk").as("date_key"), $"app_id", $"total_amount")
+    assert(rep.replicate("daily_summary", src(3)) == 3)
+    assert(rep.replicate("daily_summary", src(5)) == 2)
+    assert(spark.read.parquet(rep.sinkPath("daily_summary")).count() == 5)
+  }
+
   test("S4: a clone is a view over the source files (no copy)") {
     val dir = Files.createTempDirectory("graft-clone").toString
     Seq((1, "a"), (2, "b")).toDF("k", "v").write.parquet(s"$dir/model")

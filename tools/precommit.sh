@@ -17,6 +17,9 @@ python3 tools/leakcheck.py
 echo "== compile =="
 sbt -batch compile
 
+echo "== perfbench compile (the benchmark's JVM side against this checkout) =="
+(cd perfbench && sbt -batch compile)
+
 echo "== verify @ $SF =="
 SPARK_GRAFT_CPUS=8 sbt -batch "runMain graft.Verify $SF $OUT"
 
