@@ -35,7 +35,12 @@ object GraftSession {
     *    drop 99% in the join" into "drop 99% at the scan". The size
     *    thresholds (creation side ≤ 10 MB plan default, application
     *    side ≥ 10 GB) mean it never fires at local spec scale;
-    *    RuntimeFilterSpec lowers them to pin the injected plan shape.
+    *    RuntimeFilterSpec lowers them to pin the injected plan shape;
+    *  - ANSI on (Spark 4's default, pinned): integer overflow, invalid
+    *    casts and division by zero RAISE instead of wrapping or turning
+    *    NULL — the long-cents and unscaled-long sums' bounds proofs
+    *    (`CentsEquivalenceSpec`) are enforced at runtime, and an
+    *    overflow fails the query the way the DuckDB oracle does.
     */
   def configure(b: SparkSession.Builder, cores: Int): SparkSession.Builder =
     b.config("spark.sql.shuffle.partitions", cores.toString)
@@ -45,12 +50,15 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
+      .config("spark.sql.ansi.enabled", "true")
 
   /** Install the engine's planner rule (constant-width date-BETWEEN
     * joins → explode-to-equi; `RangeJoinRewriteSpec`) and native SQL
-    * functions (`float_dot`) on an existing session. Idempotent.
+    * functions (`float_dot`) on an existing session, and re-pin ANSI
+    * mode (see [[configure]]) there. Idempotent.
     */
   def install(spark: SparkSession): SparkSession = {
+    spark.conf.set("spark.sql.ansi.enabled", "true")
     if (!spark.experimental.extraOptimizations
         .contains(graft.plans.RangeJoinRewrite))
       spark.experimental.extraOptimizations =

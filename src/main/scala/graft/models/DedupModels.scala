@@ -467,7 +467,7 @@ object DedupModels {
         md5(concat_ws(" ", $"seg")).as("seg_hash"))
   }
 
-  /** The segment stream materialized to session-temp parquet — NOT an
+  /** The segment stream materialized to session-scratch parquet — NOT an
     * executor cache. The stream is corpus-TOKEN-grain (one row per
     * 10-token segment), so `.cache()` would pin several times the
     * corpus in block-manager memory/disk per executor at warehouse
@@ -604,7 +604,7 @@ object DedupModels {
         .as(Seq("i", "g")))
   }
 
-  /** The sliding window-gram stream materialized to session-temp
+  /** The sliding window-gram stream materialized to session-scratch
     * parquet — shared by d10 (span detection) and d11 (span trim), so
     * the one corpus scan + SpanL-dense md5 explode runs ONCE per
     * session and every consumer (per-gram stats, the position probe,
@@ -646,7 +646,7 @@ object DedupModels {
     // combines map-side (each hot gram collapses to one row per map
     // task before the shuffle), and the semi-join probe is a plain
     // equi-join AQE's skew split can subdivide. [[spanGramStream]]
-    // (session-temp parquet, shared with d11) keeps the corpus scan +
+    // (session-scratch parquet, shared with d11) keeps the corpus scan +
     // gram explode single-pass across the count and probe branches
     // without executor-cache state (the agg and probe subplans differ,
     // so exchange reuse alone would re-scan + re-md5). Both shapes were

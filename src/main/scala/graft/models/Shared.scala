@@ -1,8 +1,13 @@
 package graft.models
 
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session-scoped memo of shared model intermediates.
+/** Session-scoped memo of shared model intermediates — the one place a
+  * model stores a value it computes once per session.
   *
   * The KRE queries (q26/q28/q29/q33/q35) share a deep upstream chain —
   * closing balance (q19) → active-user balance (q28) → volatility
@@ -10,20 +15,41 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * query in its own action), every consumer would re-derive the whole
   * chain from raw events. At scale the incremental runner materializes
   * these as tables (`graft.runner.ModelRegistry`) — this memo plays the
-  * same role inside one JVM session: the FIRST consumer materializes
-  * the intermediate to a session-temp parquet directory, and every
-  * later consumer reads that tiny calendar-bounded table instead of
-  * recomputing. Parquet (not `.cache()`) so reuse survives
-  * `spark.catalog.clearCache()` between bench queries and costs no
-  * executor heap.
+  * same role inside one session: the FIRST consumer materializes the
+  * intermediate to parquet, and every later consumer reads that tiny
+  * calendar-bounded table instead of recomputing. Parquet (not
+  * `.cache()`) so reuse survives `spark.catalog.clearCache()` between
+  * bench queries and costs no executor heap.
+  *
+  *  - Key: `(applicationId, sessionUUID, sfDir, name)`. Every
+  *    `newSession()` starts with an empty memo.
+  *  - Single flight: one holder per key; the first caller builds under
+  *    the holder's lock and concurrent callers of that key wait for its
+  *    result. Different keys build concurrently, so a builder may ask
+  *    for another name (`cell_pair_sims` → `ivf_cents`) as long as the
+  *    names depend on each other acyclically. A build that throws
+  *    leaves the holder empty; the next caller builds again.
+  *  - Scratch: `<spark.sql.warehouse.dir>/.graft-shared/<applicationId>/
+  *    <sessionUUID>/<name>-<n>`, written through that path's Hadoop
+  *    `FileSystem`. The warehouse dir is cluster-visible by Spark's
+  *    contract, so every executor reads what the build wrote.
+  *  - Lifetime: one listener per SparkContext deletes the application's
+  *    scratch root and drops its memo keys on application end, so
+  *    nothing outlives `spark.stop()` (or Spark's shutdown hook, which
+  *    calls it). Only a JVM killed outright leaves its root behind.
   *
   * Correctness is unaffected: the materialized frame is the exact
   * output of the same builder, round-tripped through parquet (all
-  * intermediate schemas here are date/long/decimal — lossless).
+  * intermediate schemas here are date/long/decimal/double — lossless).
   */
 object Shared {
-  private val memo =
-    scala.collection.concurrent.TrieMap.empty[(Int, String, String), DataFrame]
+  private final case class Key(app: String, session: String, sfDir: String,
+      name: String)
+  private final class Holder { var value: Option[Any] = None }
+
+  private val memo = new ConcurrentHashMap[Key, Holder]()
+  private val listening = ConcurrentHashMap.newKeySet[String]()
+  private val scratchSeq = new AtomicLong()
 
   // names materialized since the last drain — lets the bench annotate
   // WHICH query paid each one-time materialization (per-query numbers
@@ -53,15 +79,28 @@ object Shared {
     ThreadLocal.withInitial(() =>
       scala.collection.mutable.ArrayBuffer.empty[DataFrame])
 
+  /** The value `build` returns, computed once per (session, sfDir, name). */
+  private[graft] def once[A](name: String, spark: SparkSession,
+      sfDir: String)(build: => A): A = {
+    val app = appRoot(spark).getName // also registers the app's cleanup
+    val h = memo.computeIfAbsent(Key(app, sessionUUID(spark), sfDir, name),
+      _ => new Holder)
+    h.synchronized {
+      h.value.getOrElse {
+        val a = build
+        h.value = Some(a)
+        a
+      }.asInstanceOf[A]
+    }
+  }
+
   /** Build-once-per-(session, sfDir) materialized view of `build`. */
   def materialized(name: String, spark: SparkSession, sfDir: String)(
       build: => DataFrame): DataFrame =
-    memo.getOrElseUpdate(
-      (System.identityHashCode(spark), sfDir, name), {
-        val dir = java.nio.file.Files
-          .createTempDirectory(s"graft-shared-$name-").toString
-        buildDepth.set(buildDepth.get + 1)
-        try build.write.mode("overwrite").parquet(dir)
+    once(name, spark, sfDir) {
+      buildDepth.set(buildDepth.get + 1)
+      val df =
+        try persist(spark, name, build)
         finally {
           buildDepth.set(buildDepth.get - 1)
           if (buildDepth.get == 0) {
@@ -69,9 +108,47 @@ object Shared {
             buildCaches.get.clear()
           }
         }
-        builtLog.add(name)
-        spark.read.parquet(dir)
+      builtLog.add(name)
+      df
+    }
+
+  /** Write `df` to a fresh directory under the session's scratch and
+    * read it back. */
+  private[graft] def persist(spark: SparkSession, name: String,
+      df: DataFrame): DataFrame = {
+    val dir = new Path(new Path(appRoot(spark), sessionUUID(spark)),
+      s"$name-${scratchSeq.incrementAndGet()}").toString
+    df.write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  private val sessionUUIDMethod = classOf[
+    org.apache.spark.sql.classic.SparkSession].getMethod("sessionUUID")
+
+  /** The classic `SparkSession.sessionUUID`: public in the bytecode,
+    * `private[sql]` to Scala callers outside Spark. */
+  private[graft] def sessionUUID(spark: SparkSession): String =
+    sessionUUIDMethod.invoke(spark).asInstanceOf[String]
+
+  /** `<warehouse>/.graft-shared/<applicationId>`; the first call per
+    * application registers the listener that deletes it on app end. */
+  private def appRoot(spark: SparkSession): Path = {
+    val sc = spark.sparkContext
+    val app = sc.applicationId
+    val root = new Path(new Path(
+      spark.conf.get("spark.sql.warehouse.dir"), ".graft-shared"), app)
+    if (listening.add(app)) {
+      val conf = sc.hadoopConfiguration
+      sc.addSparkListener(new SparkListener {
+        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {
+          memo.keySet.removeIf(_.app == app)
+          root.getFileSystem(conf).delete(root, true)
+          listening.remove(app)
+        }
       })
+    }
+    root
+  }
 
   /** Idempotent `.cache()`: a model builder invoked twice in one
     * session produces plan-identical frames, and a second `.cache()`

@@ -181,24 +181,8 @@ object SimilarityModels {
     * that transfers to real clustered corpora.
     */
   def ivfAnnTopK(spark: SparkSession, sfDir: String): DataFrame = {
-    withFloatDot(spark)
     import spark.implicits._
-    val base = doubledEmb(Tables.embeddings(spark, sfDir))
-    // MATERIALIZE the trained codebook (not .cache(): every join branch
-    // that references it would re-run the whole k-means chain after a
-    // cache clear — in production the codebook IS a tiny warehouse dim
-    // table, exactly AnnIndexPipeline's ann_coarse_codebook)
-    val cents = Shared.materialized("ivf_cents", spark, sfDir) {
-      coarseCodebook(base)
-    }
-    // keep only the top-2 cells per vector and MATERIALIZE: both the
-    // corpus assignment (crk=1) and the query probe set (crk≤2) read
-    // this, and an unmaterialized subtree would re-run the 16×
-    // crossJoin + window once per join branch. In production this IS
-    // the materialized IVF index table (2 short rows per vector).
-    val top2 = Shared.materialized("ivf_top2", spark, sfDir) {
-      cellTop2(base, cents)
-    }
+    val (_, top2) = ivfIndex(spark, sfDir)
     val assigned = top2.filter($"crk" === 1)
       .select($"vec_id".as("cand_id"), $"v".as("c_v"),
         $"norm".as("c_norm"), $"cid".as("cell"))
@@ -219,27 +203,9 @@ object SimilarityModels {
         $"cosine_sim", $"rk".cast(LongType).as("sim_rank"))
   }
 
-  val ivfAnnTopKOracle: String = {
-    def dot(a: String, b: String): String =
-      s"list_sum(list_transform(range(64), i -> $a[i+1] * $b[i+1]))"
-    val head =
-      s"""WITH base AS (SELECT vec_id,
-         |                     list_transform(embedding, x -> cast(x AS DOUBLE)) AS v
-         |              FROM embeddings),
-         |bn AS (SELECT vec_id, v, sqrt(${dot("v", "v")}) AS norm FROM base),
-         |km_train AS (SELECT 0 AS grp, vec_id AS id, v FROM base
-         |             WHERE vec_id < $AnnTrainCap),
-         |""".stripMargin
-    val tail =
-      s"""cents AS (SELECT cid, cv, cnorm FROM km_cents),
-         |ranked AS (
-         |  SELECT b.vec_id, b.v, b.norm, c.cid,
-         |         round(${dot("b.v", "c.cv")} / (b.norm * c.cnorm), 6) AS cell_sim,
-         |         row_number() OVER (PARTITION BY b.vec_id
-         |           ORDER BY round(${dot("b.v", "c.cv")} / (b.norm * c.cnorm), 6) DESC,
-         |                    c.cid) AS crk
-         |  FROM bn b CROSS JOIN cents c),
-         |assigned AS (SELECT vec_id AS cand_id, v AS c_v, norm AS c_norm,
+  val ivfAnnTopKOracle: String =
+    ivfIndexOracleCtes +
+      s"""assigned AS (SELECT vec_id AS cand_id, v AS c_v, norm AS c_norm,
          |                    cid AS cell
          |             FROM ranked WHERE crk = 1),
          |qcells AS (SELECT vec_id AS query_id, v AS q_v, norm AS q_norm,
@@ -247,7 +213,7 @@ object SimilarityModels {
          |           FROM ranked WHERE vec_id < 10 AND crk <= 2),
          |scored AS (
          |  SELECT q.query_id, a.cand_id, a.cell,
-         |         cast(round(${dot("q.q_v", "a.c_v")} / (q.q_norm * a.c_norm), 6)
+         |         cast(round(${sqlDot("q.q_v", "a.c_v")} / (q.q_norm * a.c_norm), 6)
          |              AS DECIMAL(24,6)) AS cosine_sim
          |  FROM assigned a JOIN qcells q ON a.cell = q.cell
          |  WHERE q.query_id <> a.cand_id)
@@ -256,8 +222,6 @@ object SimilarityModels {
          |              ORDER BY cosine_sim DESC, cand_id) AS BIGINT) AS sim_rank
          |FROM scored
          |QUALIFY sim_rank <= 3""".stripMargin
-    head + KMeans.oracleCtes("km", "km_train", 16, KmIters, 64, cosine = true) + tail
-  }
 
   /** s04: scalar-quantized (SQ8) ANN — the MEMORY-bounded vector path
     * beside s02's LSH (compare-space pruning) and s03's IVF (scan
@@ -672,6 +636,58 @@ object SimilarityModels {
     * codebook — crk=1 is the IVF assignment, crk≤2 the query probe set. */
   private[graft] def cellTop2(base: DataFrame, cents: DataFrame): DataFrame =
     cellTopN(base, cents, 2)
+
+  /** The trained IVF coarse index every cell consumer reads (s03, s08/
+    * s09, d09, c11, c14 and the curation snapshot): the codebook
+    * `ivf_cents` and each vector's two nearest cells `ivf_top2`, both
+    * session-materialized. The codebook is materialized, not cached:
+    * every join branch that references it would re-run the whole
+    * k-means chain after a cache clear — in production it IS a tiny
+    * warehouse dim table, exactly AnnIndexPipeline's
+    * ann_coarse_codebook. The top-2 table is materialized because the
+    * corpus assignment (crk=1) and a query probe set (crk≤2) both read
+    * it, and an unmaterialized subtree would re-run the 16× crossJoin +
+    * window once per join branch (2 short rows per vector: the IVF
+    * index table). */
+  private[graft] def ivfIndex(spark: SparkSession, sfDir: String)
+      : (DataFrame, DataFrame) = {
+    withFloatDot(spark)
+    val base = doubledEmb(Tables.embeddings(spark, sfDir))
+    val cents = Shared.materialized("ivf_cents", spark, sfDir) {
+      coarseCodebook(base)
+    }
+    val top2 = Shared.materialized("ivf_top2", spark, sfDir) {
+      cellTop2(base, cents)
+    }
+    (cents, top2)
+  }
+
+  /** DuckDB twin of [[ivfIndex]], opening the WITH clause: `bn`
+    * (vec_id, label, v, norm), the trained codebook `cents` and
+    * `ranked` — every vector × cell in cosine order (`crk`), which each
+    * consumer cuts to crk = 1 (assignment) or crk ≤ 2 (probe set). */
+  private lazy val ivfIndexOracleCtes: String =
+    s"""WITH base AS (SELECT vec_id, label,
+       |                     list_transform(embedding, x -> cast(x AS DOUBLE)) AS v
+       |              FROM embeddings),
+       |bn AS (SELECT vec_id, label, v, sqrt(${sqlDot("v", "v")}) AS norm
+       |       FROM base),
+       |km_train AS (SELECT 0 AS grp, vec_id AS id, v FROM base
+       |             WHERE vec_id < $AnnTrainCap),
+       |""".stripMargin +
+      KMeans.oracleCtes("km", "km_train", 16, KmIters, 64, cosine = true) +
+      s"""cents AS (SELECT cid, cv, cnorm FROM km_cents),
+       |ranked AS (
+       |  SELECT b.vec_id, b.label, b.v, b.norm, c.cid,
+       |         row_number() OVER (PARTITION BY b.vec_id
+       |           ORDER BY round(${sqlDot("b.v", "c.cv")} / (b.norm * c.cnorm), 6) DESC,
+       |                    c.cid) AS crk
+       |  FROM bn b CROSS JOIN cents c),
+       |""".stripMargin
+
+  /** DuckDB dot product of two 64-dim lists. */
+  private def sqlDot(a: String, b: String): String =
+    s"list_sum(list_transform(range(64), i -> $a[i+1] * $b[i+1]))"
 
   /** Top-n generalization of [[cellTop2]]: the IVF-PQ search probes
     * WIDER than s03's two cells ([[IvfPqNprobe]]) because quantization
@@ -1207,13 +1223,7 @@ object SimilarityModels {
       withFloatDot(spark)
       import spark.implicits._
       val emb = Tables.embeddings(spark, sfDir)
-      val base = doubledEmb(emb)
-      val cents = Shared.materialized("ivf_cents", spark, sfDir) {
-        coarseCodebook(base)
-      }
-      val top2 = Shared.materialized("ivf_top2", spark, sfDir) {
-        cellTop2(base, cents)
-      }
+      val (_, top2) = ivfIndex(spark, sfDir)
       val assigned = top2.filter($"crk" === 1)
         .join(emb.select($"vec_id", $"label"), Seq("vec_id"))
         .select($"vec_id", $"v", $"norm", $"cid".as("cell"), $"label")
@@ -1232,32 +1242,14 @@ object SimilarityModels {
           $"other_id", $"other_label", $"sim")
     }
 
-  val hardNegativeMiningOracle: String = {
-    def dot(a: String, b: String): String =
-      s"list_sum(list_transform(range(64), i -> $a[i+1] * $b[i+1]))"
-    val head =
-      s"""WITH base AS (SELECT vec_id, label,
-         |                     list_transform(embedding, x -> cast(x AS DOUBLE)) AS v
-         |              FROM embeddings),
-         |bn AS (SELECT vec_id, label, v, sqrt(${dot("v", "v")}) AS norm
-         |       FROM base),
-         |km_train AS (SELECT 0 AS grp, vec_id AS id, v FROM base
-         |             WHERE vec_id < $AnnTrainCap),
-         |""".stripMargin
-    val tail =
-      s"""cents AS (SELECT cid, cv, cnorm FROM km_cents),
-         |ranked AS (
-         |  SELECT b.vec_id, b.label, b.v, b.norm, c.cid,
-         |         row_number() OVER (PARTITION BY b.vec_id
-         |           ORDER BY round(${dot("b.v", "c.cv")} / (b.norm * c.cnorm), 6) DESC,
-         |                    c.cid) AS crk
-         |  FROM bn b CROSS JOIN cents c),
-         |asg AS (SELECT vec_id, label, v, norm, cid AS cell
+  val hardNegativeMiningOracle: String =
+    ivfIndexOracleCtes +
+      s"""asg AS (SELECT vec_id, label, v, norm, cid AS cell
          |        FROM ranked WHERE crk = 1),
          |pairs AS (
          |  SELECT a.vec_id AS anchor_id, a.label AS anchor_label,
          |         b.vec_id AS neg_id, b.label AS neg_label, a.cell,
-         |         cast(round(${dot("a.v", "b.v")} / (a.norm * b.norm), 6)
+         |         cast(round(${sqlDot("a.v", "b.v")} / (a.norm * b.norm), 6)
          |              AS DECIMAL(24,6)) AS neg_sim
          |  FROM asg a JOIN asg b
          |    ON a.cell = b.cell AND a.label <> b.label)
@@ -1266,9 +1258,6 @@ object SimilarityModels {
          |              ORDER BY neg_sim DESC, neg_id) AS BIGINT) AS neg_rank
          |FROM pairs
          |QUALIFY neg_rank <= 3""".stripMargin
-    head + KMeans.oracleCtes("km", "km_train", 16, KmIters, 64,
-      cosine = true) + tail
-  }
 
   /** s09: CONTRASTIVE TRIPLETS (beyond-reference) — s08 completed with
     * its POSITIVE side: the (anchor, positive, hard-negative) triples a
@@ -1310,32 +1299,14 @@ object SimilarityModels {
         $"neg_id", $"neg_label", $"neg_sim", $"neg_rank")
   }
 
-  val contrastiveTripletsOracle: String = {
-    def dot(a: String, b: String): String =
-      s"list_sum(list_transform(range(64), i -> $a[i+1] * $b[i+1]))"
-    val head =
-      s"""WITH base AS (SELECT vec_id, label,
-         |                     list_transform(embedding, x -> cast(x AS DOUBLE)) AS v
-         |              FROM embeddings),
-         |bn AS (SELECT vec_id, label, v, sqrt(${dot("v", "v")}) AS norm
-         |       FROM base),
-         |km_train AS (SELECT 0 AS grp, vec_id AS id, v FROM base
-         |             WHERE vec_id < $AnnTrainCap),
-         |""".stripMargin
-    val tail =
-      s"""cents AS (SELECT cid, cv, cnorm FROM km_cents),
-         |ranked AS (
-         |  SELECT b.vec_id, b.label, b.v, b.norm, c.cid,
-         |         row_number() OVER (PARTITION BY b.vec_id
-         |           ORDER BY round(${dot("b.v", "c.cv")} / (b.norm * c.cnorm), 6) DESC,
-         |                    c.cid) AS crk
-         |  FROM bn b CROSS JOIN cents c),
-         |asg AS (SELECT vec_id, label, v, norm, cid AS cell
+  val contrastiveTripletsOracle: String =
+    ivfIndexOracleCtes +
+      s"""asg AS (SELECT vec_id, label, v, norm, cid AS cell
          |        FROM ranked WHERE crk = 1),
          |prs AS (
          |  SELECT a.vec_id AS anchor_id, a.label AS anchor_label, a.cell,
          |         b.vec_id AS other_id, b.label AS other_label,
-         |         cast(round(${dot("a.v", "b.v")} / (a.norm * b.norm), 6)
+         |         cast(round(${sqlDot("a.v", "b.v")} / (a.norm * b.norm), 6)
          |              AS DECIMAL(24,6)) AS sim
          |  FROM asg a JOIN asg b
          |    ON a.cell = b.cell AND a.vec_id <> b.vec_id),
@@ -1354,9 +1325,6 @@ object SimilarityModels {
          |SELECT n.anchor_id, n.anchor_label, n.cell, p.pos_id, p.pos_sim,
          |       n.neg_id, n.neg_label, n.neg_sim, n.neg_rank
          |FROM neg n JOIN pos p USING (anchor_id)""".stripMargin
-    head + KMeans.oracleCtes("km", "km_train", 16, KmIters, 64,
-      cosine = true) + tail
-  }
 
   /** Embeddings with their 8-bit hyperplane bucket and norm — the shared
     * input of the ANN histogram (s02) and near-dup pair search (d05).
@@ -1491,13 +1459,7 @@ object SimilarityModels {
   def semanticDedup(spark: SparkSession, sfDir: String): DataFrame = {
     withFloatDot(spark)
     import spark.implicits._
-    val base = doubledEmb(Tables.embeddings(spark, sfDir))
-    val cents = Shared.materialized("ivf_cents", spark, sfDir) {
-      coarseCodebook(base)
-    }
-    val top2 = Shared.materialized("ivf_top2", spark, sfDir) {
-      cellTop2(base, cents)
-    }
+    val (_, top2) = ivfIndex(spark, sfDir)
     val members = top2.filter($"crk" === 1)
       .select($"cid".as("cell"), $"vec_id", $"v", $"norm")
     val a = members.select($"cell", $"vec_id".as("id_a"), $"v".as("v_a"),
@@ -1534,30 +1496,13 @@ object SimilarityModels {
         coalesce(concat_ws(",", $"dset"), lit("")).as("dropped_ids"))
   }
 
-  val semanticDedupOracle: String = {
-    def dot(a: String, b: String): String =
-      s"list_sum(list_transform(range(64), i -> $a[i+1] * $b[i+1]))"
-    val head =
-      s"""WITH base AS (SELECT vec_id,
-         |                     list_transform(embedding, x -> cast(x AS DOUBLE)) AS v
-         |              FROM embeddings),
-         |bn AS (SELECT vec_id, v, sqrt(${dot("v", "v")}) AS norm FROM base),
-         |km_train AS (SELECT 0 AS grp, vec_id AS id, v FROM base
-         |             WHERE vec_id < $AnnTrainCap),
-         |""".stripMargin
-    val tail =
-      s"""cents AS (SELECT cid, cv, cnorm FROM km_cents),
-         |ranked AS (
-         |  SELECT b.vec_id, b.v, b.norm, c.cid,
-         |         row_number() OVER (PARTITION BY b.vec_id
-         |           ORDER BY round(${dot("b.v", "c.cv")} / (b.norm * c.cnorm), 6) DESC,
-         |                    c.cid) AS crk
-         |  FROM bn b CROSS JOIN cents c),
-         |members AS (SELECT cid AS cell, vec_id, v, norm
+  val semanticDedupOracle: String =
+    ivfIndexOracleCtes +
+      s"""members AS (SELECT cid AS cell, vec_id, v, norm
          |            FROM ranked WHERE crk = 1),
          |pairs AS (
          |  SELECT a.cell, a.vec_id AS id_a, b.vec_id AS id_b,
-         |         round(${dot("a.v", "b.v")} / (a.norm * b.norm), 6) AS sim
+         |         round(${sqlDot("a.v", "b.v")} / (a.norm * b.norm), 6) AS sim
          |  FROM members a JOIN members b
          |    ON a.cell = b.cell AND a.vec_id < b.vec_id),
          |psum AS (SELECT cell, count(*) AS n_pairs,
@@ -1579,8 +1524,6 @@ object SimilarityModels {
          |FROM msum m
          |LEFT JOIN psum p ON m.cell = p.cell
          |LEFT JOIN drops d ON m.cell = d.cell""".stripMargin
-    head + KMeans.oracleCtes("km", "km_train", 16, KmIters, 64, cosine = true) + tail
-  }
 
   /** c11's contamination threshold: a training doc whose within-cell
     * cosine to ANY eval doc reaches this is flagged. Lower than a real
@@ -1626,13 +1569,7 @@ object SimilarityModels {
       spark: SparkSession, sfDir: String): DataFrame = {
     withFloatDot(spark)
     import spark.implicits._
-    val base = doubledEmb(Tables.embeddings(spark, sfDir))
-    val cents = Shared.materialized("ivf_cents", spark, sfDir) {
-      coarseCodebook(base)
-    }
-    val top2 = Shared.materialized("ivf_top2", spark, sfDir) {
-      cellTop2(base, cents)
-    }
+    val (_, top2) = ivfIndex(spark, sfDir)
     val members = top2.filter($"crk" === 1)
       .select($"cid".as("cell"), $"vec_id", $"v", $"norm")
     val srcs = Tables.documents(spark, sfDir).select($"doc_id", $"source")
@@ -1655,26 +1592,9 @@ object SimilarityModels {
   // LAZY: reads CurationModels.EvalSource while CurationModels'
   // funnel oracle embeds THIS string — see curationFunnelOracle's
   // cycle note; lazy on both sides breaks init-order dependence
-  lazy val semanticDecontaminationOracle: String = {
-    def dot(a: String, b: String): String =
-      s"list_sum(list_transform(range(64), i -> $a[i+1] * $b[i+1]))"
-    val head =
-      s"""WITH base AS (SELECT vec_id,
-         |                     list_transform(embedding, x -> cast(x AS DOUBLE)) AS v
-         |              FROM embeddings),
-         |bn AS (SELECT vec_id, v, sqrt(${dot("v", "v")}) AS norm FROM base),
-         |km_train AS (SELECT 0 AS grp, vec_id AS id, v FROM base
-         |             WHERE vec_id < $AnnTrainCap),
-         |""".stripMargin
-    val tail =
-      s"""cents AS (SELECT cid, cv, cnorm FROM km_cents),
-         |ranked AS (
-         |  SELECT b.vec_id, b.v, b.norm, c.cid,
-         |         row_number() OVER (PARTITION BY b.vec_id
-         |           ORDER BY round(${dot("b.v", "c.cv")} / (b.norm * c.cnorm), 6) DESC,
-         |                    c.cid) AS crk
-         |  FROM bn b CROSS JOIN cents c),
-         |members AS (SELECT cid AS cell, vec_id, v, norm
+  lazy val semanticDecontaminationOracle: String =
+    ivfIndexOracleCtes +
+      s"""members AS (SELECT cid AS cell, vec_id, v, norm
          |            FROM ranked WHERE crk = 1),
          |tagged AS (SELECT m.cell, m.vec_id, m.v, m.norm, d.source
          |           FROM members m JOIN documents d ON m.vec_id = d.doc_id),
@@ -1684,15 +1604,13 @@ object SimilarityModels {
          |       FROM tagged WHERE source <> '${CurationModels.EvalSource}'),
          |scored AS (
          |  SELECT t.doc_id, t.source, e.eval_id,
-         |         round(${dot("t.tv", "e.evv")} / (t.tn * e.en), 6) AS sim
+         |         round(${sqlDot("t.tv", "e.evv")} / (t.tn * e.en), 6) AS sim
          |  FROM tr t JOIN ev e ON t.cell = e.cell)
          |SELECT doc_id, source, count(*) AS n_eval_hits,
          |       cast(max(sim) AS DECIMAL(24,6)) AS max_eval_sim,
          |       string_agg(cast(eval_id AS VARCHAR), ',' ORDER BY eval_id)
          |         AS eval_ids
          |FROM scored WHERE sim >= $SemContamTau GROUP BY 1, 2""".stripMargin
-    head + KMeans.oracleCtes("km", "km_train", 16, KmIters, 64, cosine = true) + tail
-  }
 
   /** c14: DOMAIN-MIXTURE REWEIGHTING over DISCOVERED domains
     * (beyond-reference) — c07's temperature flattening applied to
@@ -1730,13 +1648,7 @@ object SimilarityModels {
     import spark.implicits._
     val hexVal: Column => Column =
       c => (instr(lit("0123456789abcdef"), c) - 1).cast(LongType)
-    val base = doubledEmb(Tables.embeddings(spark, sfDir))
-    val cents = Shared.materialized("ivf_cents", spark, sfDir) {
-      coarseCodebook(base)
-    }
-    val top2 = Shared.materialized("ivf_top2", spark, sfDir) {
-      cellTop2(base, cents)
-    }
+    val (_, top2) = ivfIndex(spark, sfDir)
     val members = top2.filter($"crk" === 1)
       .select($"cid".as("cell"), $"vec_id")
     val w = Window.partitionBy(lit(1)) // k-row cell table only
@@ -1769,27 +1681,10 @@ object SimilarityModels {
   }
 
   lazy val domainMixtureOracle: String = {
-    def dot(a: String, b: String): String =
-      s"list_sum(list_transform(range(64), i -> $a[i+1] * $b[i+1]))"
     def hexAt(i: Int): String =
       s"(strpos('0123456789abcdef', substr(md5(cast(vec_id AS VARCHAR)), $i, 1)) - 1)"
-    val head =
-      s"""WITH base AS (SELECT vec_id,
-         |                     list_transform(embedding, x -> cast(x AS DOUBLE)) AS v
-         |              FROM embeddings),
-         |bn AS (SELECT vec_id, v, sqrt(${dot("v", "v")}) AS norm FROM base),
-         |km_train AS (SELECT 0 AS grp, vec_id AS id, v FROM base
-         |             WHERE vec_id < $AnnTrainCap),
-         |""".stripMargin
     val tail =
-      s"""cents AS (SELECT cid, cv, cnorm FROM km_cents),
-         |ranked AS (
-         |  SELECT b.vec_id, c.cid,
-         |         row_number() OVER (PARTITION BY b.vec_id
-         |           ORDER BY round(${dot("b.v", "c.cv")} / (b.norm * c.cnorm), 6) DESC,
-         |                    c.cid) AS crk
-         |  FROM bn b CROSS JOIN cents c),
-         |members AS (SELECT cid AS cell, vec_id FROM ranked WHERE crk = 1),
+      s"""members AS (SELECT cid AS cell, vec_id FROM ranked WHERE crk = 1),
          |counts AS (SELECT cell, count(*) AS n_c FROM members GROUP BY 1),
          |tot AS (SELECT cell, n_c, sum(n_c) OVER () AS n_total FROM counts),
          |wt AS (SELECT cell, n_c, n_total,
@@ -1817,7 +1712,7 @@ object SimilarityModels {
          |       CASE WHEN bucket * 1000000 < frac_micros * 65536
          |            THEN 1 ELSE 0 END AS n_copies
          |FROM b""".stripMargin
-    head + KMeans.oracleCtes("km", "km_train", 16, KmIters, 64, cosine = true) + tail
+    ivfIndexOracleCtes + tail
   }
 
   /** s11: RECALL AUDIT (beyond-reference) — index-quality monitoring

@@ -350,19 +350,13 @@ final class CurationPipeline(spark: SparkSession, warehouseDir: String) {
     // trains on the fixed vec_id < AnnTrainCap prefix (appends land
     // above the watermark, so a full rebuild trains identically), and
     // admitting new eval vectors could flip old docs' flags
-    val baseVecs = SimilarityModels
-      .doubledEmb(Tables.embeddings(spark, sfDir))
     // the funnel's c11 leg already session-materialized the trained
     // index — reuse it (parquet round-trips doubles exactly, so the
     // frozen copy incremental runs read back assigns identically)
-    graft.models.Shared.materialized("ivf_cents", spark, sfDir) {
-      SimilarityModels.coarseCodebook(baseVecs)
-    }.write.mode(SaveMode.Overwrite)
+    val (cents, top2) = SimilarityModels.ivfIndex(spark, sfDir)
+    cents.write.mode(SaveMode.Overwrite)
       .parquet(targetPath("curation_ivf_cents"))
-    val frozenCents = spark.read.parquet(targetPath("curation_ivf_cents"))
-    graft.models.Shared.materialized("ivf_top2", spark, sfDir) {
-      SimilarityModels.cellTop2(baseVecs, frozenCents)
-    }.filter($"crk" === 1)
+    top2.filter($"crk" === 1)
       .join(Tables.documents(spark, sfDir)
         .filter($"source" === CurationModels.EvalSource)
         .select($"doc_id"), $"vec_id" === $"doc_id")

@@ -27,7 +27,7 @@ class PlanAuditSpec extends AnyFunSuite {
     *    10 broadcast query vectors on a non-equi predicate by design
     *    (s02/s03 are the bucketed/cell-pruned scale paths);
     *  - s03's codebook crossJoin happens ONCE at index-materialization
-    *    time (`Shared.materialized("ivf_top2")`), so the audited
+    *    time (`SimilarityModels.ivfIndex`), so the audited
     *    steady-state plan reads parquet and carries NO nested loop —
     *    off the allowlist since round 8;
     *  - q34/q40: the interval-path rolling actives fan the broadcast
@@ -184,7 +184,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // executor cache over a corpus-TOKEN-grain stream pins several
     // corpus-sizes of block-manager memory/disk per session — eviction
     // thrash or recompute storms at 100 TB. Shared intermediates go
-    // through Shared.materialized (session-temp parquet) instead, so no
+    // through Shared.materialized (session-scratch parquet) instead, so no
     // published query's plan may reference an InMemoryRelation. One
     // documented exception: q46 caches its (type, hour) AGGREGATE —
     // output-grain by construction — for the spine + fill branches of a

@@ -58,13 +58,7 @@ class SharedModelReuseSpec extends AnyFunSuite {
     // on the cell, self-pairs excluded, rounded cosine
     graft.functions.GraftFunctions.register(spark)
     val emb = graft.catalog.Tables.embeddings(spark, sfDir)
-    val base = SimilarityModels.doubledEmb(emb)
-    val cents = Shared.materialized("ivf_cents", spark, sfDir) {
-      SimilarityModels.coarseCodebook(base)
-    }
-    val top2 = Shared.materialized("ivf_top2", spark, sfDir) {
-      SimilarityModels.cellTop2(base, cents)
-    }
+    val (_, top2) = SimilarityModels.ivfIndex(spark, sfDir)
     val assigned = top2.filter($"crk" === 1)
       .join(emb.select($"vec_id", $"label"), Seq("vec_id"))
       .select($"vec_id", $"v", $"norm", $"cid".as("cell"), $"label")
@@ -167,14 +161,7 @@ class SharedModelReuseSpec extends AnyFunSuite {
 
   test("d09: the one-pass collect_set aggregate equals the two-aggregate formulation") {
     graft.functions.GraftFunctions.register(spark)
-    val emb = graft.catalog.Tables.embeddings(spark, sfDir)
-    val base = SimilarityModels.doubledEmb(emb)
-    val cents = Shared.materialized("ivf_cents", spark, sfDir) {
-      SimilarityModels.coarseCodebook(base)
-    }
-    val top2 = Shared.materialized("ivf_top2", spark, sfDir) {
-      SimilarityModels.cellTop2(base, cents)
-    }
+    val (_, top2) = SimilarityModels.ivfIndex(spark, sfDir)
     val members = top2.filter($"crk" === 1)
       .select($"cid".as("cell"), $"vec_id", $"v", $"norm")
     val a = members.select($"cell", $"vec_id".as("id_a"), $"v".as("v_a"),

@@ -10,9 +10,12 @@ import org.scalatest.Tag
   * plan-audit / equivalence / compaction / erasure logic (~14 min);
   * the tagged end-to-end runs remain opt-in:
   *
-  *   sbt "testOnly * -- -n graft.SlowTest"   // slow tier only
-  *   sbt "testOnly * -- -l noSuchTag"        // everything
+  *   sbt slowTest                               // slow tier only
+  *   sbt "set Test / testOptions := Nil" test   // everything
   *
-  * (Exclusion lives in build.sbt: `Tests.Argument("-l", "graft.SlowTest")`.)
+  * (Exclusion lives in build.sbt: `Tests.Argument("-l", "graft.SlowTest")`.
+  * ScalaTest's exclusion wins over inclusion, so a bare
+  * `testOnly * -- -n graft.SlowTest` runs nothing; the alias clears the
+  * default options first.)
   */
 object SlowTest extends Tag("graft.SlowTest")

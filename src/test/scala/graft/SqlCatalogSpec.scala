@@ -82,19 +82,21 @@ class SqlCatalogSpec extends AnyFunSuite {
           |         AS daily_opening_balance
           |FROM fact_creations GROUP BY 1, 2""".stripMargin),
       p.runner.readModel("creates_by_type"), "creates_by_type")
-    // a cross-view join: the payout row decorated with the day's
-    // (ecosystem-grain) volatility factor, matching the DataFrame-side
-    // equi-join
+    // a cross-view join: the (day, type) summary row decorated with
+    // the day's (ecosystem-grain) volatility factor, matching the
+    // DataFrame-side equi-join. Both sides carry rows at sf0.001 (the
+    // payout model is empty there, so it would compare two empty sets)
     val sqlJoin = spark.sql(
-      """SELECT p.date_key, p.app_id, v.volatility_factor
-        |FROM daily_payout p JOIN volatility_factor v
-        |  ON p.date_key = v.date_key""".stripMargin)
-    val dfJoin = p.runner.readModel("daily_payout")
-      .select(col("date_key"), col("app_id"))
+      """SELECT s.date_key, s.txn_type, v.volatility_factor
+        |FROM daily_txn_summary s JOIN volatility_factor v
+        |  ON s.date_key = v.date_key""".stripMargin)
+    val dfJoin = p.runner.readModel("daily_txn_summary")
+      .select(col("date_key"), col("txn_type"))
       .join(p.runner.readModel("volatility_factor")
         .select(col("date_key"), col("volatility_factor")),
         Seq("date_key"))
-    assertSame(sqlJoin, dfJoin, "payout ⋈ volatility via SQL names")
+    assert(!dfJoin.isEmpty, "summary ⋈ volatility is empty on the fixture")
+    assertSame(sqlJoin, dfJoin, "summary ⋈ volatility via SQL names")
   }
 
   test("clones and seeded dims stay SQL-addressable alongside models", SlowTest) {
