@@ -3,6 +3,7 @@ import org.apache.spark.sql.{SparkSession, DataFrame}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.DecimalType
 import graft.models._
+import graft.runner.ModelRegistry
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -25,7 +26,7 @@ import graft.models._
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    TxnModels.dailyTxnSummary(spark, "/root/testdata/sf0.001")
+    model("daily_txn_summary")(spark, "/root/testdata/sf0.001")
 
   /** Cast every top-level DecimalType output column to double (type-driven,
     * so new queries are covered automatically; no-op when decimal-free).
@@ -51,51 +52,72 @@ object SparkEntry {
       name -> ((s: SparkSession, dir: String) => decimalsToDouble(fn(s, dir)))
     }
 
+  /** A query over [[ModelRegistry.sessionResolver]]: every Kin model
+    * it reads comes from the one registry wiring, memo included. */
+  private def kin(q: (String => DataFrame) => DataFrame)
+      : (SparkSession, String) => DataFrame =
+    (spark, sfDir) => q(ModelRegistry.sessionResolver(spark, sfDir))
+
+  /** The registry model `name` as a query. */
+  private def model(name: String) = kin(_(name))
+
+  /** The registry model `name` with its `date_key` watermark column
+    * renamed back to the query's own key. */
+  private def model(name: String, key: String) =
+    kin(_(name).withColumnRenamed("date_key", key))
+
   /** The un-normalized query bodies (exact internal types preserved). */
   private[graft] def rawQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_fact_txn" -> (TxnModels.factTxn _),
-    "q02_daily_txn_summary" -> (TxnModels.dailyTxnSummary _),
-    "q03_daily_distinct_wallets" -> (ActivityModels.dailyDistinctWallets _),
-    "q04_amount_histogram" -> (ActivityModels.amountHistogram _),
-    "q05_app_summary_dim" -> (PayoutModels.appSummaryDim _),
-    "q06_wallet_day_join" -> (PayoutModels.walletDayJoin _),
-    "q07_daily_active_union" -> (ActivityModels.dailyActiveUnion _),
-    "q08_union_all_balances" -> (TpchModels.unionAllBalances _),
-    "q09_weekly_txn_rollup" -> (PayoutModels.periodTxnRollup("week") _),
-    "q10_monthly_txn_rollup" -> (PayoutModels.periodTxnRollup("month") _),
-    "q11_top_apps_daily" -> (PayoutModels.topAppsDaily _),
-    "q12_latest_wallet_state" -> (ActivityModels.latestWalletState _),
+    "q01_fact_txn" -> model("fact_txn"),
+    "q02_daily_txn_summary" -> model("daily_txn_summary"),
+    "q03_daily_distinct_wallets" -> model("daily_distinct_wallets"),
+    "q04_amount_histogram" -> model("amount_histogram"),
+    "q05_app_summary_dim" -> model("app_summary_dim"),
+    "q06_wallet_day_join" -> model("wallet_day_activity"),
+    "q07_daily_active_union" -> model("daily_active_union"),
+    "q08_union_all_balances" -> model("average_balances"),
+    "q09_weekly_txn_rollup" -> model("weekly_txn_rollup", "period_key"),
+    "q10_monthly_txn_rollup" -> model("monthly_txn_rollup", "period_key"),
+    "q11_top_apps_daily" -> model("top_apps_daily"),
+    "q12_latest_wallet_state" ->
+      kin(r => ActivityModels.latestWalletState(r("fact_txn"))),
     "q13_semi_join_high_balance" -> (TpchModels.semiJoinHighBalance _),
     "q14_anti_join_inactive" -> (TpchModels.antiJoinInactive _),
     "q15_churn_30d" -> (ActivityModels.churn30d _),
-    "q16_rolling_7d_active" -> (ActivityModels.rolling7dActive _),
+    "q16_rolling_7d_active" ->
+      kin(r => ActivityModels.rolling7dActive(r("fact_txn"))),
     "q17_rolling_30d_price" -> (TpchModels.rolling30dPrice _),
-    "q18_daily_delta" -> (ActivityModels.dailyDelta _),
-    "q19_closing_balance" -> (ActivityModels.closingBalance _),
+    "q18_daily_delta" -> kin(r => ActivityModels.dailyDelta(r("fact_txn"))),
+    "q19_closing_balance" -> model("closing_balance"),
     "q20_daily_wide_summary" -> (TpchModels.dailyWideSummary _),
     "q21_having_frequent_buyers" -> (TpchModels.havingFrequentBuyers _),
-    "q22_capped_app_balance" -> (PayoutModels.cappedAppBalance _),
-    "q23_weekly_top_apps_json" -> (PayoutModels.weeklyTopAppsJson _),
-    "q24_market_summary" -> (TpchModels.marketSummary _),
-    "q25_creates_by_segment" -> (TpchModels.createsBySegment _),
-    "q26_daily_payout" -> (KreModels.dailyPayout _),
-    "q27_volatility_factor" -> (KreModels.volatilityFactor _),
-    "q28_active_user_balance" -> (KreModels.activeUserBalance _),
-    "q29_kre_weekly_payout" -> (KreModels.kreWeeklyPayout _),
-    "q30_gc_impacted_accounts" -> (TpchModels.gcImpactedAccounts _),
-    "q31_balance_buckets" -> (ActivityModels.balanceBuckets _),
-    "q32_monthly_inactive_wallets" -> (ActivityModels.monthlyInactiveWallets _),
-    "q33_daily_net_inflation" -> (CompositeModels.dailyNetInflation _),
-    "q34_monthly_active_accounts" -> (CompositeModels.monthlyActiveAccounts _),
-    "q35_daily_kre_summary" -> (CompositeModels.dailyKreSummary _),
-    "q36_topk_amounts_per_app" -> (TxnModels.topAmountsPerApp _),
-    "q37_create_fee_payers" -> (TpchModels.createFeePayers _),
-    "q38_weekly_active_ecosystem" -> (EcosystemModels.weeklyActiveEcosystem _),
-    "q39_daily_summary_ecosystem" -> (EcosystemModels.dailySummaryEcosystem _),
-    "q40_daily_summary_by_app" -> (EcosystemModels.dailySummaryByApp _),
-    "q41_weekly_kre_payout_summary" -> (PayoutModels.weeklyKrePayoutSummary _),
-    "q42_weekly_active_accounts_app" -> (CompositeModels.weeklyActiveAccountsApp _),
-    "q43_asof_price_join" -> (ActivityModels.asofPriceJoin _),
+    "q22_capped_app_balance" -> model("capped_app_balance"),
+    "q23_weekly_top_apps_json" -> model("weekly_top_apps_json", "week_key"),
+    "q24_market_summary" -> model("market_summary"),
+    "q25_creates_by_segment" -> model("creates_by_segment"),
+    "q26_daily_payout" -> model("daily_payout"),
+    "q27_volatility_factor" -> model("volatility_factor"),
+    "q28_active_user_balance" -> model("active_user_balance"),
+    "q29_kre_weekly_payout" ->
+      kin(r => KreModels.kreWeeklyPayoutFrom(r("weekly_payout"))),
+    "q30_gc_impacted_accounts" ->
+      model("gc_impacted_accounts", "latest_order_date"),
+    "q31_balance_buckets" -> model("balance_buckets"),
+    "q32_monthly_inactive_wallets" ->
+      model("monthly_inactive_wallets", "inactive_month"),
+    "q33_daily_net_inflation" -> model("daily_net_inflation"),
+    "q34_monthly_active_accounts" -> model("monthly_active_accounts"),
+    "q35_daily_kre_summary" -> model("daily_kre_summary"),
+    "q36_topk_amounts_per_app" ->
+      kin(r => TxnModels.topAmountsPerApp(r("fact_txn"))),
+    "q37_create_fee_payers" -> model("create_fee_payers"),
+    "q38_weekly_active_ecosystem" -> model("weekly_active_ecosystem"),
+    "q39_daily_summary_ecosystem" -> model("daily_summary_ecosystem"),
+    "q40_daily_summary_by_app" -> model("daily_summary_by_app"),
+    "q41_weekly_kre_payout_summary" -> model("weekly_kre_payout_summary"),
+    "q42_weekly_active_accounts_app" -> model("weekly_active_accounts_app"),
+    "q43_asof_price_join" ->
+      kin(r => ActivityModels.asofPriceJoin(r("fact_txn"))),
     "q44_sessionization" -> (ActivityModels.sessionization _),
     "q45_last_touch_attribution" -> (ActivityModels.lastTouchAttribution _),
     "q46_hourly_gapfill" -> (ActivityModels.hourlyGapfill _),

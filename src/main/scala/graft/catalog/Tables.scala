@@ -90,15 +90,6 @@ object Tables {
         "embedding" -> ArrayType(FloatType)))
   }
 
-  /** S4 zero-copy clone: publish an existing model under another name as
-    * a metadata-only view — no data copied, reads hit the source files
-    * (the Spark equivalent of Snowflake `CREATE TABLE … CLONE`,
-    * `kin-data-pipeline/load_scripts/.../clones/` models).
-    */
-  def registerClone(s: SparkSession, cloneName: String,
-      sourcePath: String): Unit =
-    s.read.parquet(sourcePath).createOrReplaceTempView(cloneName)
-
   /** S1's SQL-name query surface: publish each materialized warehouse
     * target (model name → parquet path) as a metadata-only view, so
     * `spark.sql("SELECT … FROM daily_kin_payout")` works — the Spark
@@ -110,6 +101,9 @@ object Tables {
     * the same pushdown/pruning as a path read. A view captures the file
     * listing at registration, so callers re-register after each
     * pipeline run (DailyPipeline does) to pick up fresh partitions.
+    * A zero-copy clone (S4 — Snowflake `CREATE TABLE … CLONE`,
+    * `kin-data-pipeline/load_scripts/.../clones/` models) is one more
+    * pair: the clone name over its source model's path.
     * Returns the registered names.
     */
   def registerAll(s: SparkSession,

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
   * distinct-key volume, not the raw event volume.
   */
 object ActivityModels {
-  import TxnModels.{factTxn, ratio6, Amount}
+  import TxnModels.{ratio6, Amount}
 
   /** q43: AS-OF join — decorate each trading day with the most recent
     * price observation at-or-before it (prices are published only every
@@ -29,9 +29,8 @@ object ActivityModels {
     * fact-sized data never feeds a non-equi join. For per-key as-of
     * (quotes per symbol) the same shape partitions the window by key.
     */
-  def asofPriceJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val fact = factTxn(spark, sfDir)
+  def asofPriceJoin(fact: DataFrame): DataFrame = {
+    import fact.sparkSession.implicits._
     val daily = fact.groupBy($"date_key")
       .agg(count(lit(1)).as("txn_count"),
         sum($"amount").cast(Amount).as("day_amount"))
@@ -199,15 +198,12 @@ object ActivityModels {
        |WHERE p.purchase_ts_us - c.click_ts_us <= $AttributionWindowUs"""
       .stripMargin
 
-  /** q03: per-day distinct wallets + txn count. Ops: A5 exact
-    * count-distinct (`daily_kin_blocks.sql:5`), A1.
+  /** q03 / the `daily_distinct_wallets` model: per-day distinct
+    * wallets + txn count. Ops: A5 exact count-distinct
+    * (`daily_kin_blocks.sql:5`), A1.
     * Scale: count_distinct expands then two-phase aggregates; the group key
     * (date) is low-cardinality so AQE coalesces post-shuffle partitions.
     */
-  def dailyDistinctWallets(spark: SparkSession, sfDir: String): DataFrame =
-    dailyDistinctWalletsFrom(factTxn(spark, sfDir))
-
-  /** Frame-parameterized variant for the model registry. */
   def dailyDistinctWalletsFrom(fact: DataFrame): DataFrame = {
     import fact.sparkSession.implicits._
     fact
@@ -223,13 +219,10 @@ object ActivityModels {
       |       count(*) AS txn_count
       |FROM events WHERE event_type <> 'error' GROUP BY 1""".stripMargin
 
-  /** q04: histogram of txn counts by amount bucket. Ops: A11 CASE-bucket +
-    * count (`daily_kin_transaction_counts_by_amount.sql:4-25`).
+  /** q04 / the `amount_histogram` model: histogram of txn counts by
+    * amount bucket. Ops: A11 CASE-bucket + count
+    * (`daily_kin_transaction_counts_by_amount.sql:4-25`).
     */
-  def amountHistogram(spark: SparkSession, sfDir: String): DataFrame =
-    amountHistogramFrom(factTxn(spark, sfDir))
-
-  /** Frame-parameterized variant for the model registry. */
   def amountHistogramFrom(fact: DataFrame): DataFrame = {
     import fact.sparkSession.implicits._
     val bucket = when($"amount" < 10, "p00_10")
@@ -259,15 +252,12 @@ object ActivityModels {
       |       cast(sum(amount) AS DECIMAL(38,2)) AS total_amount
       |FROM fact GROUP BY 1, 2""".stripMargin
 
-  /** q07: daily active users as spenders ∪ earners with SQL `UNION`
-    * (distinct) semantics. Ops: U1 (`daily_active_accounts_app.sql:42`),
-    * A5. The union is deduped per (date, wallet) before counting —
-    * map-side `distinct` keeps the shuffle at distinct-pair volume.
+  /** q07 / the `daily_active_union` model: daily active users as
+    * spenders ∪ earners with SQL `UNION` (distinct) semantics. Ops: U1
+    * (`daily_active_accounts_app.sql:42`), A5. The union is deduped per
+    * (date, wallet) before counting — map-side `distinct` keeps the
+    * shuffle at distinct-pair volume.
     */
-  def dailyActiveUnion(spark: SparkSession, sfDir: String): DataFrame =
-    dailyActiveUnionFrom(factTxn(spark, sfDir))
-
-  /** Frame-parameterized variant for the model registry. */
   def dailyActiveUnionFrom(fact: DataFrame): DataFrame = {
     import fact.sparkSession.implicits._
     // type-membership filters use isin (the reference's `type in (2,3)` /
@@ -295,9 +285,9 @@ object ActivityModels {
     * (partition by wallet order by date desc) = 1`. Ops: W2, W3
     * (`multi_create_impacted_accounts.sql:27`).
     */
-  def latestWalletState(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val daily = factTxn(spark, sfDir)
+  def latestWalletState(fact: DataFrame): DataFrame = {
+    import fact.sparkSession.implicits._
+    val daily = fact
       .groupBy($"wallet_id", $"date_key")
       // long-cents sum (Cents scaladoc): (wallet, day) grain — finer
       // than the 10^17-cents day bound
@@ -366,9 +356,9 @@ object ActivityModels {
     * shuffle volume is 7×|distinct pairs| — linear, no O(n·m) range BNLJ.
     * Anchors are restricted to days present via a broadcast semi join.
     */
-  def rolling7dActive(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val pairs = factTxn(spark, sfDir)
+  def rolling7dActive(fact: DataFrame): DataFrame = {
+    import fact.sparkSession.implicits._
+    val pairs = fact
       .select($"date_key", $"wallet_id").distinct()
     val days = pairs.select($"date_key").distinct()
       .withColumnRenamed("date_key", "anchor_date")
@@ -397,9 +387,9 @@ object ActivityModels {
     * (post-aggregate), so the single-partition sort is bounded by calendar
     * size, not data size.
     */
-  def dailyDelta(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val daily = factTxn(spark, sfDir)
+  def dailyDelta(fact: DataFrame): DataFrame = {
+    import fact.sparkSession.implicits._
+    val daily = fact
       .groupBy($"date_key")
       // long-cents sum (Cents scaladoc): day grain ≤ 10^17 cents
       .agg(Cents.asMoney(sum(Cents.cents($"amount"))).as("total_amount"))
@@ -428,15 +418,11 @@ object ActivityModels {
       |            ELSE 'Contraction' END AS direction
       |FROM daily""".stripMargin
 
-  /** q31: account-balance histogram per day — the
-    * `account_balance_buckets_app.sql` composite: closing balances (J9
-    * pipeline) bucketed by CASE ranges (A11), counted per (day, bucket)
-    * with a GROUP-BY-as-dedup upstream (A7).
+  /** q31 / the `balance_buckets` model: account-balance histogram per
+    * day — the `account_balance_buckets_app.sql` composite: closing
+    * balances (J9 pipeline) bucketed by CASE ranges (A11), counted per
+    * (day, bucket) with a GROUP-BY-as-dedup upstream (A7).
     */
-  def balanceBuckets(spark: SparkSession, sfDir: String): DataFrame =
-    balanceBucketsFrom(closingBalance(spark, sfDir))
-
-  /** Frame-parameterized variant for the model registry. */
   def balanceBucketsFrom(closing: DataFrame): DataFrame = {
     import closing.sparkSession.implicits._
     val bucket = when($"closing_balance" < 25, "b00_025")
@@ -463,15 +449,12 @@ object ActivityModels {
        |FROM closing GROUP BY 1, 2""".stripMargin
   }
 
-  /** q32: monthly inactive wallets — `monthly_inactive_wallets.sql`'s
-    * composite: wallets whose LAST low-balance day (A4 max) falls in a
-    * target month, with no later above-threshold balance (J7 NOT IN ≡
-    * left_anti; keys non-null per SURVEY §7.4.6).
+  /** q32 / the `monthly_inactive_wallets` model: monthly inactive
+    * wallets — `monthly_inactive_wallets.sql`'s composite: wallets whose
+    * LAST low-balance day (A4 max) falls in a target month, with no
+    * later above-threshold balance (J7 NOT IN ≡ left_anti; keys non-null
+    * per SURVEY §7.4.6).
     */
-  def monthlyInactiveWallets(spark: SparkSession, sfDir: String): DataFrame =
-    monthlyInactiveWalletsFrom(closingBalance(spark, sfDir))
-
-  /** Frame-parameterized variant for the model registry. */
   def monthlyInactiveWalletsFrom(bal: DataFrame): DataFrame = {
     import bal.sparkSession.implicits._
     val lastLow = bal.filter($"closing_balance" <= 50)
@@ -504,7 +487,8 @@ object ActivityModels {
        |  WHERE b.date_key > l2.last_low_date AND b.closing_balance > 50)""".stripMargin
   }
 
-  /** q19: closing balance per wallet per day. Ops: J9 disjunctive
+  /** q19 / the `closing_balance` model: closing balance per wallet per
+    * day. Ops: J9 disjunctive
     * from-or-to join, realized with the unpivot-then-equi rewrite
     * (SURVEY.md §2.3 J9): each event contributes a from-side and a derived
     * to-side balance observation; last touch per (wallet, day) wins, with
@@ -514,18 +498,12 @@ object ActivityModels {
     * (wallet, day) — vs. the reference's OR-join which degrades to a
     * nested loop. Row_number (not max-struct) keeps it whole-stage-codegen.
     *
-    * Session-memoized (`Shared.materialized`): closing balance is the
-    * most-shared intermediate (q22/q26/q28/q31/q32/q33/q35 all consume
-    * it), so the first consumer materializes it once per (session,
-    * sfDir) and the rest read the materialized table — the standalone
-    * analog of the runner's model materialization.
+    * Session-memoized (`ModelRegistry.SessionMemo`): closing balance is
+    * among the most-shared intermediates (q26/q28/q31/q32/q33/q35 all
+    * consume it), so the first consumer materializes it once per
+    * (session, sfDir) and the rest read the materialized table — the
+    * standalone analog of the runner's model materialization.
     */
-  def closingBalance(spark: SparkSession, sfDir: String): DataFrame =
-    Shared.materialized("q19_closing_balance", spark, sfDir) {
-      closingBalanceFrom(graft.catalog.Tables.events(spark, sfDir))
-    }
-
-  /** Frame-parameterized variant for the model registry. */
   def closingBalanceFrom(events: DataFrame): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._

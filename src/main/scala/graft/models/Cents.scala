@@ -32,8 +32,10 @@ import org.apache.spark.sql.types._
   * keep DECIMAL — or split the basis so each long stays inside the
   * proof (q08's hi/lo ten-thousandths). Posture past the proven bound:
   * the old decimal sum was exact (or overflowed a declared cast to
-  * NULL); a long sum would wrap — which is why a site without a
-  * written proof must not convert.
+  * NULL); the long sum fails the query with ARITHMETIC_OVERFLOW under
+  * the ANSI mode `GraftSession` pins (CentsEquivalenceSpec) — a run
+  * that was correct becomes a run that fails, which is why a site
+  * without a written proof must not convert.
   */
 private[graft] object Cents {
   /** The unscaled long of a scale-2 decimal = exact cents. Null-safe

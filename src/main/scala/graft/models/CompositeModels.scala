@@ -1,6 +1,6 @@
 package graft.models
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -16,13 +16,13 @@ import org.apache.spark.sql.types._
   * `graft.runner.ModelRegistry`).
   */
 object CompositeModels {
-  import TxnModels.factTxn
 
   private val Money = DecimalType(38, 2)
   private def zeroMoney =
     lit(new java.math.BigDecimal("0.00")).cast(Money)
 
-  /** q33: daily net inflation — `daily_net_inflation.sql:40-55`:
+  /** q33 / the `daily_net_inflation` model: daily net inflation —
+    * `daily_net_inflation.sql:40-55`:
     * payout − Δbalance − churn, flagged Inflation/Contraction/None.
     * Legs: daily payout (q26 rollup), total closing balance (q19 rollup,
     * current and previous day via a date-shifted self of the same
@@ -38,15 +38,6 @@ object CompositeModels {
     * vacuously empty; the algebra is window-size-independent.
     */
   private val ChurnWindowDays = 7
-
-  def dailyNetInflation(spark: SparkSession, sfDir: String): DataFrame = {
-    // closing balance and the payout chain are session-memoized
-    // materializations (graft.models.Shared) — the three consumers here
-    // (payout rollup, balance leg, churn leg) read tiny tables
-    val bal = ActivityModels.closingBalance(spark, sfDir)
-    val payout = KreModels.dailyPayout(spark, sfDir)
-    dailyNetInflationFrom(payout, bal, dailyChurnVolumeFrom(bal))
-  }
 
   /** Churn volume as a standalone model (`daily_churn_volume.sql`):
     * per day, total closing balance of wallets with NO later balance
@@ -71,8 +62,10 @@ object CompositeModels {
   }
 
   /** The q33 composite over already-built inputs (`payout` = q26 rows,
-    * `bal` = q19 rows, `churn` = dailyChurnVolumeFrom rows) — the form
-    * the model registry runs against materialized upstream targets. */
+    * `bal` = q19 rows, `churn` = dailyChurnVolumeFrom rows). Closing
+    * balance and the payout chain are session-memoized, so the three
+    * consumers here (payout rollup, balance leg, churn leg) read tiny
+    * tables. */
   def dailyNetInflationFrom(payout: DataFrame, bal: DataFrame,
       churn: DataFrame): DataFrame = {
     import bal.sparkSession.implicits._
@@ -144,9 +137,10 @@ object CompositeModels {
        |            ELSE 'None' END AS inflation_flag
        |FROM joined""".stripMargin
 
-  /** THE shared intermediate of the whole actives family (q34, q38,
-    * q39, q40 ×2, q42, q35's monthly leg): the deduped per-day activity
-    * grid — one row per (date, app, wallet) observed in the fact,
+  /** The `app_activity_grid` model — THE shared intermediate of the
+    * whole actives family (q34, q38, q39, q40 ×2, q42, q35's monthly
+    * leg), session-memoized: the deduped per-day activity grid — one
+    * row per (date, app, wallet) observed in the fact,
     * flagged by role (the reference's `type in (2,3)` / `(1,3)`
     * spender/earner split mapped through the q07 event-type
     * convention). No role pre-filter, so the grid's day set is exactly
@@ -169,48 +163,23 @@ object CompositeModels {
         max($"txn_type".isin(EcosystemModels.EarnTypes: _*)).as("is_earn"))
   }
 
-  /** Session-memoized materialization of [[appActivityGridFrom]] — the
-    * in-JVM analog of the registry's `app_activity_grid` model: built
-    * once per (session, sfDir), consumed by every actives query. */
-  def appActivityGrid(spark: SparkSession, sfDir: String): DataFrame =
-    Shared.materialized("app_activity_grid", spark, sfDir) {
-      appActivityGridFrom(factTxn(spark, sfDir))
-    }
-
-  /** q34: 30-day rolling distinct actives per (day, app) with the
-    * spender/earner/user split — `monthly_active_accounts_app.sql:19-38`.
-    * The reference's three ×30 range joins become ONE explode-to-equi
-    * phase over the shared DEDUPED flagged (date, app, wallet) grid
-    * (same rewrite family as q16; see [[activeAccountsAppFromGrid]]):
-    * explode factor is a constant 30 applied after dedupe, so the
-    * shuffled volume is 30×|distinct triples| — linear, no range BNLJ.
-    */
-  def monthlyActiveAccounts(spark: SparkSession, sfDir: String): DataFrame =
-    monthlyActiveAccountsShared(spark, sfDir)
-
-  /** Session-memoized (`Shared.materialized`) q34 rows — the reference
-    * PUBLISHES `monthly_active_accounts_app` as a table and
-    * `daily_summary_by_app` reads it (the registry model of the same
-    * name); here q34 and q40's monthly leg share one build the same
-    * way. */
-  private[graft] def monthlyActiveAccountsShared(
-      spark: SparkSession, sfDir: String): DataFrame =
-    Shared.materialized("q34_monthly_active_accounts", spark, sfDir) {
-      activeAccountsAppFromGrid(appActivityGrid(spark, sfDir), 29)
-    }
-
-  /** q42: 7-day rolling per-app actives —
-    * `weekly_active_accounts_app.sql` (the grid cell q34/q40 don't
-    * cover; daily=q40 legs, monthly=q34). */
-  def weeklyActiveAccountsApp(spark: SparkSession, sfDir: String): DataFrame =
-    activeAccountsAppFromGrid(appActivityGrid(spark, sfDir), 6)
-
   val weeklyActiveAccountsAppOracle: String = activeAccountsAppOracle(6)
 
   /** App-grain actives at any window — the reference's
     * `{daily,weekly,monthly}_active_accounts_app.sql` grid (lookback
     * 0 / 6 / 29); lookback=0 skips the explode entirely (plain per-day
     * aggregate).
+    *
+    * q34 / the `monthly_active_accounts` model (lookback 29,
+    * `monthly_active_accounts_app.sql:19-38`): the reference's three ×30
+    * range joins become ONE pass over the shared DEDUPED flagged
+    * (date, app, wallet) grid (same rewrite family as q16) — linear, no
+    * range BNLJ. The reference PUBLISHES it as a table and
+    * `daily_summary_by_app` reads it; here q34 and q40's monthly leg
+    * share one session-memoized build the same way. q42 / the
+    * `weekly_active_accounts_app` model is lookback 6
+    * (`weekly_active_accounts_app.sql` — the grid cell q34/q40 don't
+    * cover).
     *
     * One-pass formulation: the reference's three per-role pipelines
     * (users = spend ∪ earn, spenders, earners — each its own distinct +
@@ -231,7 +200,7 @@ object CompositeModels {
     activeAccountsAppFromGrid(appActivityGridFrom(factIn), lookback)
 
   /** The tail of [[activeAccountsAppFrom]] over an already-built (often
-    * materialized — [[appActivityGrid]] / the registry model) grid.
+    * materialized — the `app_activity_grid` model) grid.
     *
     * lookback = 0 is a plain per-day flag aggregate. lookback > 0 uses
     * the INTERVAL (difference-array) formulation instead of the older
@@ -420,36 +389,20 @@ object CompositeModels {
 
   val monthlyActiveAccountsOracle: String = activeAccountsAppOracle(29)
 
-  /** q35: the wide KRE API row — `daily_kre_summary.sql:77-83`: daily
-    * transactions ⋈ AUB totals ⋈ monthly actives ⋈ volatility factor ⋈
-    * payouts, all keyed on date. The reference's three separate monthly
-    * role legs come from the shared one-pass grid (see
-    * `EcosystemModels.activeEcosystemFrom`), so the physical join is
-    * 5 inputs for the same 12-column row. Every leg is a
-    * one-row-per-day aggregate; Catalyst/AQE broadcasts them, so join
-    * width costs nothing at scale.
-    */
-  def dailyKreSummary(spark: SparkSession, sfDir: String): DataFrame = {
-    // AUB, VF and the payout are session-memoized materializations —
-    // the direct legs and the payout leg all read the same tiny tables
-    // (in the runner these arrive as materialized upstream models)
-    val aub = KreModels.activeUserBalance(spark, sfDir)
-    val vf = KreModels.volatilityFactor(spark, sfDir)
-    val payout = KreModels.dailyPayout(spark, sfDir)
-    dailyKreSummaryFrom(factTxn(spark, sfDir),
-      appActivityGrid(spark, sfDir), aub, vf, payout,
-      monthlyIn = Some(EcosystemModels.ecoActiveMonthly(spark, sfDir)))
-  }
-
-  /** The q35 composite over already-built inputs (`factIn` = q01 rows,
-    * `gridIn` = the [[appActivityGridFrom]] rows, `aubIn` = q28 rows,
-    * `vfIn` = q27 rows, `payoutIn` = q26 rows; `monthlyIn` optionally
-    * injects the already-materialized 30-day ecosystem actives —
-    * `EcosystemModels.ecoActiveMonthly` rows — instead of re-deriving
-    * them from the grid). */
-  def dailyKreSummaryFrom(factIn: DataFrame, gridIn: DataFrame,
-      aubIn: DataFrame, vfIn: DataFrame, payoutIn: DataFrame,
-      monthlyIn: Option[DataFrame] = None): DataFrame = {
+  /** q35 / the `daily_kre_summary` model: the wide KRE API row —
+    * `daily_kre_summary.sql:77-83`: daily transactions ⋈ AUB totals ⋈
+    * monthly actives ⋈ volatility factor ⋈ payouts, all keyed on date.
+    * The reference's three separate monthly role legs are one
+    * `monthly_active_ecosystem` table (see
+    * `EcosystemModels.activeEcosystemFromGrid`), so the physical join is
+    * 5 inputs for the same 12-column row. Every leg is a one-row-per-day
+    * aggregate; Catalyst/AQE broadcasts them, so join width costs nothing
+    * at scale. Inputs: `factIn` = q01 rows, `aubIn` = q28 rows, `vfIn` =
+    * q27 rows, `payoutIn` = q26 rows, `monthlyActives` = the 30-day
+    * ecosystem actives (`monthly_active_ecosystem` rows). */
+  def dailyKreSummaryFrom(factIn: DataFrame, aubIn: DataFrame,
+      vfIn: DataFrame, payoutIn: DataFrame,
+      monthlyActives: DataFrame): DataFrame = {
     import factIn.sparkSession.implicits._
     // no cache — same reasoning as activeAccountsAppFrom
     val fact = factIn
@@ -468,13 +421,10 @@ object CompositeModels {
       .groupBy($"date_key")
       .agg(sum($"post_monopoly_payout").cast(Money).as("kin_payout"),
         sum($"post_monopoly_payout_usd").cast(Money).as("usd_payout"))
-    // monthly actives via the shared activity grid (no fact re-scan —
-    // see appActivityGridFrom). The reference's final SELECT inner-joins
-    // each role leg, so a date whose whole 30-day window lacks a role is
-    // DROPPED, not 0-filled — filter to reproduce that join semantics
-    // exactly
-    val monthly = monthlyIn
-      .getOrElse(EcosystemModels.activeEcosystemFromGrid(gridIn, 29))
+    // the reference's final SELECT inner-joins each monthly role leg,
+    // so a date whose whole 30-day window lacks a role is DROPPED, not
+    // 0-filled — filter to reproduce that join semantics exactly
+    val monthly = monthlyActives
       .filter($"active_spenders" > 0 && $"active_earners" > 0)
       .select($"date_key",
         $"active_users".as("monthly_active_users"),

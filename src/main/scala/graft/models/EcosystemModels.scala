@@ -1,7 +1,6 @@
 package graft.models
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.{SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -21,7 +20,6 @@ import org.apache.spark.sql.types._
   * aggregate. The summary composite joins one-row-per-day legs only.
   */
 object EcosystemModels {
-  import TxnModels.factTxn
 
   private val Money = DecimalType(38, 2)
 
@@ -44,7 +42,16 @@ object EcosystemModels {
     activeEcosystemFromGrid(
       CompositeModels.appActivityGridFrom(factIn), lookback)
 
-  /** Ecosystem tail over the shared app-grain activity grid
+  /** Ecosystem tail over the shared app-grain activity grid — the
+    * `{daily,weekly,monthly}_active_ecosystem` models (lookback 0 / 6 /
+    * 29). q38 is the weekly one (`weekly_active_accounts_ecosystem.sql:
+    * 1-58`). The monthly one is session-memoized: the reference
+    * publishes `monthly_active_accounts_ecosystem` as a table and both
+    * wide API rows read it — q39's monthly leg and q35's monthly-actives
+    * join share one build instead of each paying the ×30 explode over
+    * the grid.
+    *
+    * Reads the app-grain grid
     * ([[CompositeModels.appActivityGridFrom]]): the app dimension is
     * OR-reduced away — a wallet's ecosystem role flag is the max of its
     * per-app flags, so the (date, wallet) grid derived here is
@@ -83,25 +90,6 @@ object EcosystemModels {
         sum(when($"w_earn", 1L).otherwise(0L)).as("active_earners"))
   }
 
-  /** q38: weekly (7-day rolling) ecosystem actives —
-    * `weekly_active_accounts_ecosystem.sql:1-58`. */
-  def weeklyActiveEcosystem(spark: SparkSession, sfDir: String): DataFrame =
-    activeEcosystemFromGrid(
-      CompositeModels.appActivityGrid(spark, sfDir), 6)
-
-  /** Session-memoized (`Shared.materialized`) 30-day ecosystem actives —
-    * the reference publishes `monthly_active_accounts_ecosystem` as a
-    * table (the registry's `monthly_active_ecosystem` model) and both
-    * wide API rows read it: q39's monthly leg and q35's
-    * monthly-actives join share this one build instead of each paying
-    * the ×30 explode over the grid. */
-  private[graft] def ecoActiveMonthly(
-      spark: SparkSession, sfDir: String): DataFrame =
-    graft.models.Shared.materialized("eco_active_monthly", spark, sfDir) {
-      activeEcosystemFromGrid(
-        CompositeModels.appActivityGrid(spark, sfDir), 29)
-    }
-
   private def activeEcosystemOracle(lookback: Int): String = {
     val window =
       if (lookback == 0) "u.date_key = d.anchor_date"
@@ -134,28 +122,18 @@ object EcosystemModels {
 
   val weeklyActiveEcosystemOracle: String = activeEcosystemOracle(6)
 
-  /** q39: the wide ecosystem API row — `daily_summary_ecosystem.sql`:
-    * per-day transaction totals split by type family, decorated with
-    * daily + monthly ecosystem actives and USD legs via the price dim
-    * (VF's `average_price` stands in for `dim_kin_price.prices`;
-    * FIXTURES.md §B). USD legs are computed in double with identical
-    * expression text on both sides (the q26 parity strategy).
+  /** q39 / the `daily_summary_ecosystem` model: the wide ecosystem API
+    * row — `daily_summary_ecosystem.sql`: per-day transaction totals
+    * split by type family, decorated with daily + monthly ecosystem
+    * actives and USD legs via the price dim (VF's `average_price` stands
+    * in for `dim_kin_price.prices`; FIXTURES.md §B). USD legs are
+    * computed in double with identical expression text on both sides
+    * (the q26 parity strategy). `gridIn` = the shared activity grid,
+    * `monthlyActives` = the 30-day actives (`monthly_active_ecosystem`
+    * rows), `vf` carries (date_key, average_price).
     */
-  def dailySummaryEcosystem(spark: SparkSession, sfDir: String): DataFrame = {
-    val fact = factTxn(spark, sfDir)
-    val vf = KreModels.volatilityFactor(spark, sfDir)
-    dailySummaryEcosystemFrom(fact,
-      CompositeModels.appActivityGrid(spark, sfDir), vf,
-      monthlyIn = Some(ecoActiveMonthly(spark, sfDir)))
-  }
-
-  /** Frame-parameterized variant for the model registry (`gridIn` =
-    * the shared activity grid; `vf` must carry
-    * (date_key, average_price); `monthlyIn` optionally injects an
-    * already-materialized 30-day actives table — [[ecoActiveMonthly]]
-    * rows — instead of re-deriving it from the grid). */
   def dailySummaryEcosystemFrom(factIn: DataFrame, gridIn: DataFrame,
-      vf: DataFrame, monthlyIn: Option[DataFrame] = None): DataFrame = {
+      monthlyActives: DataFrame, vf: DataFrame): DataFrame = {
     import factIn.sparkSession.implicits._
     val fact = factIn.select($"date_key", $"app_id", $"wallet_id",
       $"txn_type", $"amount")
@@ -184,8 +162,7 @@ object EcosystemModels {
       .select($"date_key", $"active_users".as("daily_active_users"),
         $"active_spenders".as("daily_active_spenders"),
         $"active_earners".as("daily_active_earners"))
-    val monthly = monthlyIn
-      .getOrElse(activeEcosystemFromGrid(gridIn, 29))
+    val monthly = monthlyActives
       .select($"date_key", $"active_users".as("monthly_active_users"),
         $"active_spenders".as("monthly_active_spenders"),
         $"active_earners".as("monthly_active_earners"))
@@ -213,44 +190,33 @@ object EcosystemModels {
         coalesce($"monthly_active_earners", lit(0L)).as("monthly_active_earners"))
   }
 
-  /** q40: the per-app wide API row — `daily_summary_by_app.sql:1-74`:
-    * per-(day, app) transaction stats split by type family with USD
-    * legs, the constant-fee column + its USD leg, the app-dim name
-    * decoration (`coalesce(app.name, app_id::VARCHAR)`), and the daily
-    * + monthly per-app actives. This is the row the reference's public
-    * API serves per application (J10 multi-way: txns ⋈ daily ⋈ monthly
-    * ⋈ dim ⋈ price). VF's `average_price` stands in for BOTH
-    * `dim_kin_price.prices` and `dim_solana_price.prices` — the fixture
-    * carries one price series (FIXTURES.md §B); USD legs are double ×
-    * double with identical expression text on both sides (q26 parity
-    * strategy), and the fee column reproduces the reference's literal
-    * `sum(0.00001)` quirk (`daily_kin_transactions.sql:12`).
+  /** q40 / the `daily_summary_by_app` model: the per-app wide API row —
+    * `daily_summary_by_app.sql:1-74`: per-(day, app) transaction stats split by
+    * type family with USD legs, the constant-fee column + its USD leg, the
+    * app-dim name decoration (`coalesce(app.name, app_id::VARCHAR)`), and the
+    * daily + monthly per-app actives. This is the row the reference's public
+    * API serves per application (J10 multi-way: txns ⋈ daily ⋈ monthly ⋈ dim ⋈
+    * price). VF's `average_price` stands in for BOTH `dim_kin_price.prices` and
+    * `dim_solana_price.prices` — the fixture carries one price series
+    * (FIXTURES.md §B); USD legs are double × double with identical expression
+    * text on both sides (q26 parity strategy), and the fee column reproduces
+    * the reference's literal `sum(0.00001)` quirk
+    * (`daily_kin_transactions.sql:12`).
     *
     * Scale: every leg aggregates to (day, app) grain BEFORE any join,
     * so all five joins are dimension-sized regardless of fact volume;
     * the app dim is broadcast; the txns leg scans the fact once
-    * (amount columns the grid doesn't carry), and both actives legs
-    * read the shared materialized activity grid instead of re-deduping
-    * the fact — one fact scan + one grid build per session/run instead
-    * of the three fact scans this model paid before.
+    * (amount columns the grid doesn't carry), and the actives legs read
+    * the shared materialized activity grid (daily) and the published q34
+    * rows (monthly) instead of re-deduping the fact — one fact scan + one
+    * grid build per session/run instead of the three fact scans this
+    * model paid before. `monthlyActives` = `monthly_active_accounts`
+    * rows, `vf` carries (date_key, average_price), `nation` is the app
+    * dim.
     */
-  def dailySummaryByApp(spark: SparkSession, sfDir: String): DataFrame =
-    dailySummaryByAppFrom(factTxn(spark, sfDir),
-      CompositeModels.appActivityGrid(spark, sfDir),
-      KreModels.volatilityFactor(spark, sfDir),
-      graft.catalog.Tables.nation(spark, sfDir),
-      monthlyIn =
-        Some(CompositeModels.monthlyActiveAccountsShared(spark, sfDir)))
-
-  /** Frame-parameterized variant for the model registry (`gridIn` =
-    * the shared activity grid; `vf` carries (date_key, average_price);
-    * `nation` is the app dim; `monthlyIn` optionally injects the
-    * already-materialized q34 rows — the published
-    * `monthly_active_accounts` table — instead of re-deriving them
-    * from the grid). */
   def dailySummaryByAppFrom(factIn: DataFrame, gridIn: DataFrame,
-      vf: DataFrame, nation: DataFrame,
-      monthlyIn: Option[DataFrame] = None): DataFrame = {
+      monthlyActives: DataFrame, vf: DataFrame,
+      nation: DataFrame): DataFrame = {
     import factIn.sparkSession.implicits._
     val fact = factIn.select($"date_key", $"app_id", $"wallet_id",
       $"txn_type", $"amount")
@@ -284,8 +250,7 @@ object EcosystemModels {
         $"active_users".as("daily_active_users"),
         $"active_earners".as("daily_active_earners"),
         $"active_spenders".as("daily_active_spenders"))
-    val monthly = monthlyIn
-      .getOrElse(CompositeModels.activeAccountsAppFromGrid(gridIn, 29))
+    val monthly = monthlyActives
       .select($"date_key", $"app_id",
         $"active_users".as("monthly_active_users"),
         $"active_earners".as("monthly_active_earners"),

@@ -8,9 +8,9 @@ import org.apache.spark.sql.types._
 /** The KRE economics layer — the reference's most intricate models,
   * re-expressed as one DAG over the events analog:
   *
-  *   closingBalance (q19) ─┐
-  *                         ├→ activeUserBalance (q28) ─┐
-  *   volatilityFactor (q27)┴──────────────────────────→├→ dailyPayout (q26)
+  *   closing_balance (q19) ─┐
+  *                          ├→ active_user_balance (q28) ─┐
+  *   volatility_factor (q27)┴────────────────────────────→├→ daily_payout (q26)
   *
   * Sources: `daily_volatility_factor.sql` (VF = mean 30d |price−mean| /
   * mean), `daily_active_user_balance_by_app.sql` (AU = ≥3 spends in 30d;
@@ -24,15 +24,10 @@ import org.apache.spark.sql.types._
   * reduced); final columns round to decimal(24,6).
   */
 object KreModels {
-  import TxnModels.factTxn
-  import graft.catalog.Tables
 
   /** Daily "price": mean event value per day in exact integer micros
     * (the events-world analog of the price dim feeding VF).
     */
-  private def dailyPriceMicros(spark: SparkSession, sfDir: String): DataFrame =
-    dailyPriceMicrosFrom(factTxn(spark, sfDir))
-
   private def dailyPriceMicrosFrom(fact: DataFrame): DataFrame = {
     import fact.sparkSession.implicits._
     fact
@@ -42,22 +37,18 @@ object KreModels {
         expr("cast(amt_sum * 1000000 as bigint) div n").as("price_micros"))
   }
 
-  /** q27: 30-day volatility factor, entirely in integer micros.
+  /** q27 / the `volatility_factor` model: 30-day volatility factor,
+    * entirely in integer micros.
     * The reference's two range joins (`daily_volatility_factor.sql:25-36`)
     * become two explode-to-equi phases: (1) per-anchor mean of the 30-day
     * price window; (2) per-anchor mean absolute deviation; then
     * vf = dev/mean. Ops: J4 ×2, A2, `abs`.
     *
     * Scale: explode factor is a constant 30 over one-row-per-day input —
-    * bounded fan-out, plain hash aggregates, no BNLJ.
+    * bounded fan-out, plain hash aggregates, no BNLJ. Session-memoized
+    * (`ModelRegistry.SessionMemo`): consumed standalone (q27) and by
+    * q26/q33/q35/q39/q40.
     */
-  def volatilityFactor(spark: SparkSession, sfDir: String): DataFrame =
-    // session-memoized: consumed standalone (q27) and by q26/q33/q35
-    Shared.materialized("q27_volatility_factor", spark, sfDir) {
-      volatilityFactorFrom(factTxn(spark, sfDir))
-    }
-
-  /** Frame-parameterized variant for the model registry. */
   def volatilityFactorFrom(fact: DataFrame): DataFrame = {
     val spark = fact.sparkSession
     import spark.implicits._
@@ -112,21 +103,16 @@ object KreModels {
       |            cast(0.000001 AS DECIMAL(7,6)) AS DECIMAL(24,6)) AS volatility_factor
       |FROM dev""".stripMargin
 
-  /** q28: KRE active-user balance per (day, app). AU = wallets with ≥3
+  /** q28 / the `active_user_balance` model: KRE active-user balance per
+    * (day, app). AU = wallets with ≥3
     * purchases in the trailing 30 days for that app
     * (`daily_active_user_balance_by_app.sql:26-34`); AUB = sum of those
     * wallets' same-day closing balances (0 when untouched that day);
     * capped_aub = least(aub, au × 1000) (the AU×100000 cap rule, :67-70).
     * Ops: J4 (explode ×30 after dedupe), P9, J2, A1, A9.
+    * Session-memoized (`ModelRegistry.SessionMemo`): consumed standalone
+    * (q28) and by q26/q33/q35.
     */
-  def activeUserBalance(spark: SparkSession, sfDir: String): DataFrame =
-    // session-memoized: consumed standalone (q28) and by q26/q33/q35
-    Shared.materialized("q28_active_user_balance", spark, sfDir) {
-      activeUserBalanceFrom(factTxn(spark, sfDir),
-        ActivityModels.closingBalance(spark, sfDir))
-    }
-
-  /** Frame-parameterized variant for the model registry. */
   def activeUserBalanceFrom(factIn: DataFrame,
       closingBalance: DataFrame): DataFrame = {
     val spark = factIn.sparkSession
@@ -201,8 +187,8 @@ object KreModels {
        |  ON b.date_key = au.anchor_date AND b.wallet_id = au.wallet_id
        |GROUP BY 1, 2""".stripMargin
 
-  /** q26: daily per-app payout with the monopoly caps, faithfully
-    * reproducing `daily_kin_payout.sql`:
+  /** q26 / the `daily_payout` model: daily per-app payout with the
+    * monopoly caps, faithfully reproducing `daily_kin_payout.sql`:
     *   share_i = capped_aub_i / Σ capped_aub            (double)
     *   payout_i = share_i × (B × (1 − VF)), B = 250e6
     *   if s1 > 0.5:   s1' = 0.5 + ((s1−0.5)/0.5)·(2/3 − 1/2)
@@ -211,26 +197,15 @@ object KreModels {
     * Lateral aliases (`top_share_adjusted_initial` reused downstream) are
     * expanded by binding expressions to vals (SURVEY §2.8).
     * Ops: J1, J8 (rank-1/rank-2 self-joins), W1, A9, J3 dim decoration.
-    */
-  def dailyPayout(spark: SparkSession, sfDir: String): DataFrame =
-    // session-memoized: consumed standalone (q26) and by q29/q33. The
-    // AUB/VF inputs are themselves memoized materializations, so the
-    // share algebra below reads two tiny calendar-bounded tables.
-    Shared.materialized("q26_daily_payout", spark, sfDir) {
-      import spark.implicits._
-      val aub = activeUserBalance(spark, sfDir)
-        .select($"date_key", $"app_id", $"capped_aub")
-      val vf = volatilityFactor(spark, sfDir)
-        .select($"date_key", $"volatility_factor", $"average_price")
-      val dim = Tables.nation(spark, sfDir).select($"n_nationkey", $"n_name")
-      dailyPayoutFrom(spark, aub, vf, dim)
-    }
-
-  /** The payout share algebra over already-built inputs — separated so
-    * the monopoly-cap branches are unit-testable with crafted AUB/VF
-    * frames (PayoutEdgeSpec) independent of the upstream DAG.
-    * `aub`: (date_key, app_id, capped_aub); `vf`: (date_key,
-    * volatility_factor, average_price); `dim`: (n_nationkey, n_name).
+    *
+    * Takes already-built inputs so the monopoly-cap branches are
+    * unit-testable with crafted AUB/VF frames (PayoutEdgeSpec)
+    * independent of the upstream DAG. `aub`: (date_key, app_id,
+    * capped_aub); `vf`: (date_key, volatility_factor, average_price);
+    * `dim`: (n_nationkey, n_name). Session-memoized
+    * (`ModelRegistry.SessionMemo`): consumed standalone (q26) and by
+    * q29/q33/q35/q41, whose inputs are themselves memoized, so the share
+    * algebra reads two tiny calendar-bounded tables.
     */
   def dailyPayoutFrom(spark: SparkSession, aub: DataFrame, vf: DataFrame,
       dim: DataFrame): DataFrame = {
@@ -298,8 +273,10 @@ object KreModels {
           .as("post_monopoly_payout_usd"))
   }
 
-  /** q29: weekly payout rollup — `kre_weekly_payout.sql`. The window per
-    * week-anchor W (a Monday) is reproduced LITERALLY from the
+  /** q29 / the `weekly_payout` model: weekly payout rollup —
+    * `kre_weekly_payout.sql`, over daily_payout rows, keyed by the week
+    * anchor W as `date_key` (the runner's watermark column). The window
+    * per week-anchor W (a Monday) is reproduced LITERALLY from the
     * reference's Sunday-anchored arithmetic (SURVEY §7.4.3 — don't
     * "fix" it): from = dateadd(week,-1,dateadd(day,-1,W)) = W−8;
     * to = dateadd(day,-2,W) = W−2 — i.e. previous-week Sunday through
@@ -316,11 +293,11 @@ object KreModels {
     * map-side, no fan-out at all. (`RangeJoinRewrite` also handles the
     * shifted-BETWEEN shape engine-wide for user-written queries.)
     */
-  def kreWeeklyPayout(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    // dailyPayout is a memoized materialization — the two references
+  def weeklyPayoutFrom(dailyPayout: DataFrame): DataFrame = {
+    import dailyPayout.sparkSession.implicits._
+    // daily_payout is a memoized materialization — the two references
     // below (weeks + the join) each re-read a tiny parquet, no cache
-    val payout = dailyPayout(spark, sfDir)
+    val payout = dailyPayout
       .select($"date_key", $"app_id", $"app_name",
         $"post_monopoly_payout", $"post_monopoly_payout_usd")
     val weeks = payout
@@ -330,17 +307,25 @@ object KreModels {
       .withColumn("week_key",
         date_trunc("week", date_add($"date_key", 8)).cast(DateType))
       .join(broadcast(weeks), Seq("week_key"), "left_semi")
-      .groupBy($"week_key", $"app_id", $"app_name")
+      .groupBy($"week_key".as("date_key"), $"app_id", $"app_name")
       .agg(
         sum($"post_monopoly_payout").cast(DecimalType(38, 2))
           .as("weekly_kin_payout"),
         sum($"post_monopoly_payout_usd").cast(DecimalType(38, 2))
           .as("weekly_usd_payout"))
-      .select($"week_key", $"app_id", $"app_name",
+  }
+
+  /** q29's served row: the [[weeklyPayoutFrom]] rollup (`weekly` =
+    * weekly_payout rows) under its week key, stamped with the
+    * reference's run date and served window. */
+  def kreWeeklyPayoutFrom(weekly: DataFrame): DataFrame = {
+    import weekly.sparkSession.implicits._
+    weekly
+      .select($"date_key".as("week_key"), $"app_id", $"app_name",
         $"weekly_kin_payout", $"weekly_usd_payout",
-        $"week_key".as("run_date"),
-        date_sub($"week_key", 8).as("from_date"),
-        date_sub($"week_key", 2).as("to_date"))
+        $"date_key".as("run_date"),
+        date_sub($"date_key", 8).as("from_date"),
+        date_sub($"date_key", 2).as("to_date"))
       .orderBy($"week_key", $"app_id")
   }
 

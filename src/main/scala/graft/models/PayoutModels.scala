@@ -1,6 +1,6 @@
 package graft.models
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -10,21 +10,16 @@ import org.apache.spark.sql.types._
   * and the weekly/monthly re-aggregation family (SURVEY.md §2.11).
   */
 object PayoutModels {
-  import TxnModels.{factTxn, ratio6}
+  import TxnModels.ratio6
 
-  /** q05: per-(day, app) summary decorated with the app dimension.
-    * Ops: J3 left dim-lookup join with explicit broadcast
-    * (`daily_kin_transactions.sql:99`), A1, null→'UNKNOWN' coalesce.
-    * `nation` stands in for `dim_kin_app` (FIXTURES.md §B).
+  /** q05 / the `app_summary_dim` model: per-(day, app) summary decorated with
+    * the app dimension. Ops: J3 left dim-lookup join with explicit broadcast
+    * (`daily_kin_transactions.sql:99`), A1, null→'UNKNOWN' coalesce. `nation`
+    * stands in for `dim_kin_app` (FIXTURES.md §B).
     *
     * Scale: aggregate FIRST (shuffle on the group key), then broadcast-join
     * the 25-row dim — the fact table is never shuffled for the join.
     */
-  def appSummaryDim(spark: SparkSession, sfDir: String): DataFrame =
-    appSummaryDimFrom(factTxn(spark, sfDir),
-      graft.catalog.Tables.nation(spark, sfDir))
-
-  /** Frame-parameterized variant for the model registry. */
   def appSummaryDimFrom(fact: DataFrame, nation: DataFrame): DataFrame = {
     import fact.sparkSession.implicits._
     val dim = nation.select($"n_nationkey", $"n_name")
@@ -51,16 +46,11 @@ object PayoutModels {
       |       a.txn_count, a.total_amount
       |FROM agg a LEFT JOIN nation n ON a.app_id = n.n_nationkey""".stripMargin
 
-  /** q06: composite-key join of spend-side and total-side per-wallet daily
-    * aggregates. Ops: J2 equi join on (date_key, wallet_id)
-    * (`daily_active_user_balance_by_app.sql:58-59`).
-    * Scale: both sides aggregate to the same key before the join, so AQE
-    * can pick a single co-partitioned exchange.
-    */
-  def walletDayJoin(spark: SparkSession, sfDir: String): DataFrame =
-    walletDayJoinFrom(factTxn(spark, sfDir))
-
-  /** Frame-parameterized variant for the model registry. */
+  /** q06 / the `wallet_day_activity` model: composite-key join of spend-side
+    * and total-side per-wallet daily aggregates. Ops: J2 equi join on
+    * (date_key, wallet_id) (`daily_active_user_balance_by_app.sql:58-59`).
+    * Scale: both sides aggregate to the same key before the join, so AQE can
+    * pick a single co-partitioned exchange. */
   def walletDayJoinFrom(fact: DataFrame): DataFrame = {
     import fact.sparkSession.implicits._
     val total = fact.groupBy($"date_key", $"wallet_id")
@@ -86,14 +76,6 @@ object PayoutModels {
       |FROM total t JOIN spend s
       |  ON s.date_key = t.date_key AND s.wallet_id = t.wallet_id""".stripMargin
 
-  /** q09/q10: weekly/monthly re-aggregation of the daily summary —
-    * the reference's `weekly_kin_transactions.sql` / `monthly_…` pattern
-    * (A1 regroup via `date_trunc`). Avg is recomputed from sums, never
-    * averaged-of-averages.
-    */
-  def periodTxnRollup(unit: String)(spark: SparkSession, sfDir: String): DataFrame =
-    periodTxnRollupFrom(unit, factTxn(spark, sfDir))
-
   /** The rollup's aggregate algebra, shared VERBATIM with the weekly
     * streaming twin (`streaming/StreamingModelRunner`) so batch and
     * stream cannot drift. */
@@ -118,7 +100,12 @@ object PayoutModels {
         .cast(DecimalType(24, 6)))
     .drop("amt_sum_raw")
 
-  /** Frame-parameterized variant for the model registry. */
+  /** q09/q10 / the `{weekly,monthly}_txn_rollup` models: weekly/monthly
+    * re-aggregation of the daily summary — the reference's
+    * `weekly_kin_transactions.sql` / `monthly_…` pattern (A1 regroup via
+    * `date_trunc`). Avg is recomputed from sums, never
+    * averaged-of-averages.
+    */
   def periodTxnRollupFrom(unit: String, fact: DataFrame): DataFrame = {
     import fact.sparkSession.implicits._
     rollupFinish(fact
@@ -138,15 +125,10 @@ object PayoutModels {
        |            cast(0.000001 AS DECIMAL(7,6)) AS DECIMAL(24,6)) AS avg_amount
        |FROM fact GROUP BY 1, 2""".stripMargin
 
-  /** q11: top-3 apps by daily payout via dense_rank. Ops: W1 ranking
-    * window (`daily_kin_payout.sql:30`), W3 rank-filter top-k
-    * (`weekly_kre_payout_summary.sql:33`). dense_rank (not row_number) so
-    * value ties rank identically in both engines.
-    */
-  def topAppsDaily(spark: SparkSession, sfDir: String): DataFrame =
-    topAppsDailyFrom(factTxn(spark, sfDir))
-
-  /** Frame-parameterized variant for the model registry. */
+  /** q11 / the `top_apps_daily` model: top-3 apps by daily payout via
+    * dense_rank. Ops: W1 ranking window (`daily_kin_payout.sql:30`), W3
+    * rank-filter top-k (`weekly_kre_payout_summary.sql:33`). dense_rank (not
+    * row_number) so value ties rank identically in both engines. */
   def topAppsDailyFrom(fact: DataFrame): DataFrame = {
     import fact.sparkSession.implicits._
     val payout = fact
@@ -172,15 +154,10 @@ object PayoutModels {
       |       cast(dense_rank() OVER (PARTITION BY date_key ORDER BY payout DESC) AS BIGINT) AS payout_rank
       |FROM payout QUALIFY payout_rank <= 3""".stripMargin
 
-  /** q22: capped aggregate outputs — `capped_aub = least(aub, au*cap)` +
-    * CASE classification over agg aliases. Ops: A9
-    * (`daily_active_user_balance_by_app.sql:61-76`), lateral-alias
-    * expansion done by binding the expression once (SURVEY.md §2.8).
-    */
-  def cappedAppBalance(spark: SparkSession, sfDir: String): DataFrame =
-    cappedAppBalanceFrom(factTxn(spark, sfDir))
-
-  /** Frame-parameterized variant for the model registry. */
+  /** q22 / the `capped_app_balance` model: capped aggregate outputs —
+    * `capped_aub = least(aub, au*cap)` + CASE classification over agg aliases.
+    * Ops: A9 (`daily_active_user_balance_by_app.sql:61-76`), lateral-alias
+    * expansion done by binding the expression once (SURVEY.md §2.8). */
   def cappedAppBalanceFrom(fact: DataFrame): DataFrame = {
     import fact.sparkSession.implicits._
     val agg = fact
@@ -212,17 +189,12 @@ object PayoutModels {
       |            THEN 'Capped' ELSE 'Uncapped' END AS cap_state
       |FROM agg""".stripMargin
 
-  /** q23: weekly top-3 apps serialized as a JSON array. Ops: A10
-    * `array_agg(object_construct(…))` + `to_json`
-    * (`weekly_kre_payout_summary.sql:25-31,39`), W1/W3.
-    * JSON is built by explicit string concatenation in BOTH engines so the
-    * byte output is deterministic (collect_list ordering is not —
-    * SURVEY.md §2.4 A10 — hence the sort before serializing).
-    */
-  def weeklyTopAppsJson(spark: SparkSession, sfDir: String): DataFrame =
-    weeklyTopAppsJsonFrom(factTxn(spark, sfDir))
-
-  /** Frame-parameterized variant for the model registry. */
+  /** q23 / the `weekly_top_apps_json` model: weekly top-3 apps serialized as a
+    * JSON array. Ops: A10 `array_agg(object_construct(…))` + `to_json`
+    * (`weekly_kre_payout_summary.sql:25-31,39`), W1/W3. JSON is built by
+    * explicit string concatenation in BOTH engines so the byte output is
+    * deterministic (collect_list ordering is not — SURVEY.md §2.4 A10 — hence
+    * the sort before serializing). */
   def weeklyTopAppsJsonFrom(fact: DataFrame): DataFrame = {
     import fact.sparkSession.implicits._
     val weekly = fact
@@ -247,7 +219,8 @@ object PayoutModels {
           lit("]")).as("top_apps_json"))
   }
 
-  /** q41: the weekly KRE payout API row — `weekly_kre_payout_summary.sql:
+  /** q41 / the `weekly_kre_payout_summary` model: the weekly KRE payout
+    * API row — `weekly_kre_payout_summary.sql:
     * 1-46`: per week, the TOTAL kin/usd payout over all apps plus the
     * top-10 apps (dense_rank on kin payout) serialized as a JSON array
     * of `{"id","name","kinPayout","usdPayout"}` objects — the row the
@@ -257,18 +230,9 @@ object PayoutModels {
     *
     * Scale: input grain is (week, app) — calendar-bounded; the window
     * partitions by week (tiny), the JSON leg aggregates ≤10 rows/week.
+    * `weekly` = weekly_payout rows: date_key, app_id, app_name,
+    * weekly_kin_payout, weekly_usd_payout.
     */
-  def weeklyKrePayoutSummary(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    weeklyKrePayoutSummaryFrom(
-      KreModels.kreWeeklyPayout(spark, sfDir)
-        .select($"week_key".as("date_key"), $"app_id", $"app_name",
-          $"weekly_kin_payout", $"weekly_usd_payout"))
-  }
-
-  /** Frame-parameterized variant for the model registry (`weekly` =
-    * weekly_payout rows: date_key, app_id, app_name, weekly_kin_payout,
-    * weekly_usd_payout). */
   def weeklyKrePayoutSummaryFrom(weekly: DataFrame): DataFrame = {
     import weekly.sparkSession.implicits._
     val w = Window.partitionBy($"date_key").orderBy($"weekly_kin_payout".desc)

@@ -10,14 +10,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * model stores a value it computes once per session.
   *
   * The KRE queries (q26/q28/q29/q33/q35) share a deep upstream chain —
-  * closing balance (q19) → active-user balance (q28) → volatility
-  * factor (q27) → payout (q26). Run standalone (the driver benches each
-  * query in its own action), every consumer would re-derive the whole
-  * chain from raw events. At scale the incremental runner materializes
-  * these as tables (`graft.runner.ModelRegistry`) — this memo plays the
-  * same role inside one session: the FIRST consumer materializes the
-  * intermediate to parquet, and every later consumer reads that tiny
-  * calendar-bounded table instead of recomputing. Parquet (not
+  * closing_balance (q19) → active_user_balance (q28) →
+  * volatility_factor (q27) → daily_payout (q26). Run standalone (the
+  * bench times each query in its own action), every consumer would
+  * re-derive the whole chain from raw events. At scale the incremental
+  * runner materializes these as tables (`graft.runner.ModelRegistry`)
+  * — this memo plays the same role inside one session: the FIRST
+  * consumer materializes the intermediate to parquet, and every later
+  * consumer reads that tiny calendar-bounded table instead of
+  * recomputing. For the Kin models the memoized names are declared
+  * once, as `ModelRegistry.SessionMemo`, and `ModelRegistry.
+  * sessionResolver` is their only caller; the corpus operators memoize
+  * their own intermediates by name. Parquet (not
   * `.cache()`) so reuse survives `spark.catalog.clearCache()` between
   * bench queries and costs no executor heap.
   *

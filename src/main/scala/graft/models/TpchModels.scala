@@ -15,13 +15,10 @@ object TpchModels {
 
   private val Money = DecimalType(18, 2)
 
-  /** q08: avg of from-side/to-side balances with `UNION ALL` (keep-both)
+  /** q08 / the `average_balances` model: avg of from-side/to-side
+    * balances with `UNION ALL` (keep-both)
     * semantics. Ops: U2 (`average_account_balance_per_day.sql:28`), A2.
     */
-  def unionAllBalances(spark: SparkSession, sfDir: String): DataFrame =
-    unionAllBalancesFrom(Tables.lineitem(spark, sfDir))
-
-  /** Frame-parameterized variant for the model registry. */
   def unionAllBalancesFrom(li: DataFrame): DataFrame = {
     import li.sparkSession.implicits._
     // price and discount are exact 2-dp values; the (1-d) discount cast
@@ -113,20 +110,13 @@ object TpchModels {
       |            cast(0.000001 AS DECIMAL(7,6)) AS DECIMAL(24,6)) AS avg_balance
       |FROM sides GROUP BY 1""".stripMargin
 
-  /** q37: fee-payer rollup with DOUBLE dim decoration — the
-    * `create_fee_payers.sql` shape (§2.11: A1, J3 ×2 — the model that
-    * joins both its grouping dim and a price dim). Aggregate FIRST on
-    * the raw key (shuffled join with the data-sized customer table, AQE
-    * decides), then decorate the calendar-bounded aggregate with TWO
-    * broadcast dims (nation, region — the second standing in for the
-    * SOL→USD price dim).
+  /** q37 / the `create_fee_payers` model: fee-payer rollup with DOUBLE dim
+    * decoration — the `create_fee_payers.sql` shape (§2.11: A1, J3 ×2 — the
+    * model that joins both its grouping dim and a price dim). Aggregate FIRST
+    * on the raw key (shuffled join with the data-sized customer table, AQE
+    * decides), then decorate the calendar-bounded aggregate with TWO broadcast
+    * dims (nation, region — the second standing in for the SOL→USD price dim).
     */
-  def createFeePayers(spark: SparkSession, sfDir: String): DataFrame =
-    createFeePayersFrom(Tables.orders(spark, sfDir),
-      Tables.customer(spark, sfDir), Tables.nation(spark, sfDir),
-      Tables.region(spark, sfDir))
-
-  /** Frame-parameterized variant for the model registry. */
   def createFeePayersFrom(orders: DataFrame, customer: DataFrame,
       nation: DataFrame, region: DataFrame): DataFrame = {
     import orders.sparkSession.implicits._
@@ -349,18 +339,12 @@ object TpchModels {
       |       cast(sum(cast(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(38,2)) AS total_spend
       |FROM orders GROUP BY 1 HAVING count(*) >= 10""".stripMargin
 
-  /** q30: the GC composite — `multi_create_impacted_accounts.sql`'s
-    * shape end-to-end: multi-instruction transactions (HAVING count>1,
-    * A8/P9) → impacted accounts via semi join (J6) → latest state per
-    * account via dense_rank desc = 1 (W2/W3) → stamped output. The
-    * reference stamps `current_date` (line 38); here the stamp is an
-    * injected literal (SURVEY §7.4.1 — never the wall clock).
-    */
-  def gcImpactedAccounts(spark: SparkSession, sfDir: String): DataFrame =
-    gcImpactedAccountsFrom(Tables.orders(spark, sfDir),
-      Tables.lineitem(spark, sfDir))
-
-  /** Frame-parameterized variant for the model registry.
+  /** q30 / the `gc_impacted_accounts` model: the GC composite —
+    * `multi_create_impacted_accounts.sql`'s shape end-to-end: multi-instruction
+    * transactions (HAVING count>1, A8/P9) → impacted accounts via semi join
+    * (J6) → latest state per account via dense_rank desc = 1 (W2/W3) → stamped
+    * output. The reference stamps `current_date` (line 38); here the stamp is
+    * an injected literal (SURVEY §7.4.1 — never the wall clock).
     *
     * ONE orders scan (r16, guide §2.4 — the r15 verdict's q30 ask):
     * the old shape scanned orders twice (semi-join → distinct custkey →
@@ -416,8 +400,8 @@ object TpchModels {
       |       DATE '2002-01-01' AS flagged_date
       |FROM ranked WHERE rk = 1""".stripMargin
 
-  /** q24: market summary — price/volume plus the derived
-    * circulating-supply ratio. Ops: P1 + arithmetic
+  /** q24 / the `market_summary` model: market summary — price/volume plus the
+    * derived circulating-supply ratio. Ops: P1 + arithmetic
     * (`daily_market_summary.sql:4-20`: supply = mcap/price).
     *
     * LONG-CENTS AGGREGATION (r16 — the r15 verdict's deferred overflow
@@ -434,10 +418,6 @@ object TpchModels {
     * the same row bound reaches ~10^19 and FAILS this proof, so q08
     * keeps DECIMAL (see unionAllBalancesFrom).
     */
-  def marketSummary(spark: SparkSession, sfDir: String): DataFrame =
-    marketSummaryFrom(Tables.lineitem(spark, sfDir))
-
-  /** Frame-parameterized variant for the model registry. */
   def marketSummaryFrom(li: DataFrame): DataFrame = {
     import li.sparkSession.implicits._
     val cents = lit(new java.math.BigDecimal("0.01")).cast(DecimalType(3, 2))
@@ -474,7 +454,8 @@ object TpchModels {
       |            cast(0.000001 AS DECIMAL(7,6)) AS DECIMAL(24,6)) AS avg_price
       |FROM daily""".stripMargin
 
-  /** q25: creations per (day, market segment) — fact ⋈ dim then
+  /** q25 / the `creates_by_segment` model: creations per (day, market
+    * segment) — fact ⋈ dim then
     * aggregate. Ops: A1, J3 dim-lookup join
     * (`daily_account_creates_by_app.sql:6-14` + dim decoration).
     * Scale: `customer` scales WITH the data here (unlike nation/region),
@@ -482,11 +463,6 @@ object TpchModels {
     * safe at any scale and AQE broadcasts when the pruned two-column
     * dim actually fits under the threshold.
     */
-  def createsBySegment(spark: SparkSession, sfDir: String): DataFrame =
-    createsBySegmentFrom(Tables.orders(spark, sfDir),
-      Tables.customer(spark, sfDir))
-
-  /** Frame-parameterized variant for the model registry. */
   def createsBySegmentFrom(orders: DataFrame,
       customer: DataFrame): DataFrame = {
     import orders.sparkSession.implicits._

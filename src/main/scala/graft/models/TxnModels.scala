@@ -1,6 +1,6 @@
 package graft.models
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -32,23 +32,16 @@ object TxnModels {
   def ratio6(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     round(c, 6).cast(DecimalType(24, 6))
 
-  /** q01: cleaned transaction fact. Ops: A6 (dedupe), P1 (project/rename),
-    * P2 (status filter), casts, null→0 app_id (§1.2).
+  /** q01 / the `fact_txn` model: cleaned transaction fact. Ops: A6
+    * (dedupe), P1 (project/rename), P2 (status filter), casts, null→0
+    * app_id (§1.2).
     *
-    * Session-memoized (`Shared.materialized`): the fact IS a
+    * Session-memoized (`ModelRegistry.SessionMemo`): the fact IS a
     * materialized table in the reference (`fact_kin_transaction` — every
     * mart reads the table, not the view), and ~25 standalone queries
     * here consume it; the first builds it once per (session, sfDir),
     * the rest read the materialized copy instead of re-running the
     * dedupe + JSON parse.
-    */
-  def factTxn(spark: SparkSession, sfDir: String): DataFrame =
-    Shared.materialized("q01_fact_txn", spark, sfDir) {
-      factTxnFrom(graft.catalog.Tables.events(spark, sfDir))
-    }
-
-  /** Frame-parameterized fact builder (used by the model registry, where
-    * the events source is resolved by the runner).
     */
   def factTxnFrom(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
@@ -70,13 +63,6 @@ object TxnModels {
       |       event_type AS txn_type, cast(value AS DECIMAL(18,2)) AS amount,
       |       coalesce(cast(json_extract_string(props,'$.k') AS INTEGER), 0) AS app_id
       |FROM events WHERE event_type <> 'error'""".stripMargin
-
-  /** q02 (flagship): daily per-type summary. Ops: A1 (grouped sum/count),
-    * A2 (avg), A3 (exact median), constant-fee quirk
-    * (`daily_kin_transactions.sql:12`).
-    */
-  def dailyTxnSummary(spark: SparkSession, sfDir: String): DataFrame =
-    dailyTxnSummaryFrom(factTxn(spark, sfDir))
 
   /** The per-(day,type) summary aggregate algebra — shared VERBATIM by
     * the batch model and its streaming twin
@@ -109,7 +95,10 @@ object TxnModels {
         .cast(DecimalType(24, 6)))
       .drop("amt_sum_raw")
 
-  /** Frame-parameterized variant for the model registry. */
+  /** q02 (flagship) / the `daily_txn_summary` model: daily per-type
+    * summary. Ops: A1 (grouped sum/count), A2 (avg), A3 (exact median),
+    * constant-fee quirk (`daily_kin_transactions.sql:12`).
+    */
   def dailyTxnSummaryFrom(fact: DataFrame): DataFrame =
     summaryFinish(
       fact.groupBy(col("date_key"), col("txn_type"))
@@ -125,10 +114,10 @@ object TxnModels {
     * canonicalize array cells still works. The explode fan-out is
     * bounded at k=3 rows per group, so it adds no scale cost.
     */
-  def topAmountsPerApp(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
+  def topAmountsPerApp(fact: DataFrame): DataFrame = {
+    import fact.sparkSession.implicits._
     val top3 = udaf(graft.functions.TopKLongs(3))
-    factTxn(spark, sfDir)
+    fact
       .select($"app_id", ($"amount" * 100).cast(LongType).as("cents"))
       .groupBy($"app_id")
       .agg(top3($"cents").as("top_amounts"))

@@ -409,8 +409,9 @@ final class IncrementalRunner(
     clones.foreach { case (cloneName, src) =>
       require(models.exists(_.name == src),
         s"clone $cloneName references unregistered model $src")
-      graft.catalog.Tables.registerClone(spark, cloneName, targetPath(src))
     }
+    graft.catalog.Tables.registerAll(spark,
+      clones.map { case (cloneName, src) => cloneName -> targetPath(src) })
     counts
   }
 

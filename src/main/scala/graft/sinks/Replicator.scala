@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Warehouse → serving-store replication: the engine's analog of
@@ -58,7 +58,12 @@ final class Replicator(spark: SparkSession, store: ServingStore) {
 
   /** Replicate one model into the serving store. Incremental: append only
     * source rows with `date_key` newer than the sink watermark;
-    * rebuild=true: full replace. Returns rows written.
+    * rebuild=true: full replace. Returns rows written, counted on the
+    * write itself (`Dataset.observe`, as the warehouse runner counts),
+    * so the source slice is read once by the write plus one `isEmpty`
+    * probe that stops at the first row. An empty slice appends nothing
+    * (no empty part file in a parquet sink) and only creates the sink
+    * when it is missing.
     */
   def replicate(table: String, source: DataFrame,
       rebuild: Boolean = false,
@@ -71,14 +76,17 @@ final class Replicator(spark: SparkSession, store: ServingStore) {
         case None => source
       }
     val out = camelize(slice, renames)
-    val n = out.count()
-    if (rebuild) store.rebuild(out, table)
-    else if (n > 0) store.append(out, table)
-    else if (!store.exists(table))
+    val rows = Observation()
+    val observed = out.observe(rows, count(lit(1)).as("n"))
+    def written(): Long = rows.get.get("n").fold(0L)(_.asInstanceOf[Long])
+    if (rebuild) { store.rebuild(observed, table); written() }
+    else if (!out.isEmpty) { store.append(observed, table); written() }
+    else {
       // the reference's replicator always creates the target table —
       // materialize an empty schema-bearing sink so consumers resolve it
-      store.create(out, table)
-    n
+      if (!store.exists(table)) store.create(out, table)
+      0L
+    }
   }
 
   /** Sink-side destructive repair: delete every served row with

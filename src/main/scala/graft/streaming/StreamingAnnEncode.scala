@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Streaming twin of [[graft.runner.AnnIndexPipeline.runIncremental]]:
@@ -110,12 +110,8 @@ object StreamingAnnEncode {
   def runAvailableNow(spark: SparkSession, inputDir: String,
       warehouseDir: String, checkpointDir: String, outDir: String)
       : StreamingQuery = {
-    encodeStream(spark, inputDir, warehouseDir).writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamingModelRunner.appendAvailableNow(
+      encodeStream(spark, inputDir, warehouseDir),
+      checkpointDir, outDir)
   }
 }

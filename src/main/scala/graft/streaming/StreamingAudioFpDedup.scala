@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.multimodal.MultimodalOps
 
 /** Streaming twin of m10's audio fingerprint dedup — the ingest seat
@@ -64,12 +64,8 @@ object StreamingAudioFpDedup {
   def runAvailableNow(spark: SparkSession, inputDir: String,
       known: DataFrame, checkpointDir: String, outDir: String)
       : StreamingQuery = {
-    newSigStream(spark, inputDir, known).writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamingModelRunner.appendAvailableNow(
+      newSigStream(spark, inputDir, known),
+      checkpointDir, outDir)
   }
 }

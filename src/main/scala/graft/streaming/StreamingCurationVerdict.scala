@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 import graft.models.{CurationModels, DedupModels, SimilarityModels}
 
@@ -207,12 +207,8 @@ object StreamingCurationVerdict {
   def runAvailableNow(spark: SparkSession, inputDir: String,
       warehouseDir: String, embeddings: DataFrame, checkpointDir: String,
       outDir: String): StreamingQuery = {
-    verdictStream(spark, inputDir, warehouseDir, embeddings).writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamingModelRunner.appendAvailableNow(
+      verdictStream(spark, inputDir, warehouseDir, embeddings),
+      checkpointDir, outDir)
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming exact deduplication — the streaming-native form of the
   * fact layer's `dropDuplicates("event_id")` cleanup (q01/d01's batch
@@ -35,12 +35,8 @@ object StreamingDedup {
     * deduped stream to `outDir`. */
   def runAvailableNow(spark: SparkSession, inputDir: String,
       checkpointDir: String, outDir: String): StreamingQuery = {
-    dedupStream(spark, inputDir).writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamingModelRunner.appendAvailableNow(
+      dedupStream(spark, inputDir),
+      checkpointDir, outDir)
   }
 }

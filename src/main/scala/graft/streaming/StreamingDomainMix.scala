@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Streaming twin of [[graft.models.SimilarityModels.domainMixture]]
@@ -107,12 +107,8 @@ object StreamingDomainMix {
   def runAvailableNow(spark: SparkSession, inputDir: String,
       warehouseDir: String, checkpointDir: String, outDir: String)
       : StreamingQuery = {
-    mixStream(spark, inputDir, warehouseDir).writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamingModelRunner.appendAvailableNow(
+      mixStream(spark, inputDir, warehouseDir),
+      checkpointDir, outDir)
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Streaming twin of [[graft.models.CurationModels.fimTransform]]
@@ -34,12 +34,8 @@ object StreamingFim {
     * transformed index to `outDir`. */
   def runAvailableNow(spark: SparkSession, inputDir: String,
       checkpointDir: String, outDir: String): StreamingQuery = {
-    fimStream(spark, inputDir).writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamingModelRunner.appendAvailableNow(
+      fimStream(spark, inputDir),
+      checkpointDir, outDir)
   }
 }

@@ -274,10 +274,19 @@ object StreamingModelRunner {
     */
   def catchUp(spark: SparkSession, model: String, inputDir: String,
       checkpointDir: String, targetDir: String): StreamingQuery =
-    twins(model)(spark, inputDir).writeStream
+    appendAvailableNow(twins(model)(spark, inputDir), checkpointDir,
+      targetDir)
+
+  /** The catch-up write every streaming twin runs: append `stream` to
+    * the parquet directory `outDir` over the files present now
+    * (Trigger.AvailableNow), checkpointed at `checkpointDir`, then
+    * stop. */
+  def appendAvailableNow(stream: DataFrame, checkpointDir: String,
+      outDir: String): StreamingQuery =
+    stream.writeStream
       .outputMode("append")
       .format("parquet")
-      .option("path", targetDir)
+      .option("path", outDir)
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()

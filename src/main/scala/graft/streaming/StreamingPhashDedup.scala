@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 import graft.multimodal.MultimodalOps
 
@@ -77,12 +77,8 @@ object StreamingPhashDedup {
   def runAvailableNow(spark: SparkSession, inputDir: String,
       known: DataFrame, checkpointDir: String, outDir: String)
       : StreamingQuery = {
-    newHashStream(spark, inputDir, known).writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamingModelRunner.appendAvailableNow(
+      newHashStream(spark, inputDir, known),
+      checkpointDir, outDir)
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Streaming twin of the curation pipeline's incremental SEGMENT stage
@@ -80,12 +80,8 @@ object StreamingSegmentDedup {
   def runAvailableNow(spark: SparkSession, inputDir: String,
       keepers: DataFrame, checkpointDir: String, outDir: String)
       : StreamingQuery = {
-    newKeeperStream(spark, inputDir, keepers).writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamingModelRunner.appendAvailableNow(
+      newKeeperStream(spark, inputDir, keepers),
+      checkpointDir, outDir)
   }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{
-  GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+  GroupStateTimeout, OutputMode, StreamingQuery}
 
 import graft.models.DedupModels
 
@@ -158,13 +158,9 @@ object StreamingSpanTrim {
   def runAvailableNow(spark: SparkSession, inputDir: String,
       knownGrams: DataFrame, checkpointDir: String, outDir: String)
       : StreamingQuery = {
-    removalStream(spark, inputDir, knownGrams).writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamingModelRunner.appendAvailableNow(
+      removalStream(spark, inputDir, knownGrams),
+      checkpointDir, outDir)
   }
 
   /** Run the TRIMMED-corpus stream to completion over the files
@@ -172,12 +168,8 @@ object StreamingSpanTrim {
   def runTrimAvailableNow(spark: SparkSession, inputDir: String,
       knownGrams: DataFrame, checkpointDir: String, outDir: String)
       : StreamingQuery = {
-    trimmedStream(spark, inputDir, knownGrams).toDF().writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamingModelRunner.appendAvailableNow(
+      trimmedStream(spark, inputDir, knownGrams).toDF(),
+      checkpointDir, outDir)
   }
 }

@@ -60,12 +60,8 @@ object StreamingSummary {
     */
   def runAvailableNow(spark: SparkSession, inputDir: String,
       checkpointDir: String, outDir: String): StreamingQuery = {
-    dailySummaryStream(spark, inputDir).writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamingModelRunner.appendAvailableNow(
+      dailySummaryStream(spark, inputDir),
+      checkpointDir, outDir)
   }
 }

@@ -66,8 +66,8 @@ object RunnerDemo {
     println(s"[replicate] sink columns=" +
       spark.read.parquet(rep.sinkPath("daily_txn_summary"))
         .columns.sorted.mkString(","))
-    graft.catalog.Tables.registerClone(spark, "daily_txn_summary_clone",
-      wh + "/daily_txn_summary")
+    graft.catalog.Tables.registerAll(spark,
+      Seq("daily_txn_summary_clone" -> s"$wh/daily_txn_summary"))
     println(s"[clone] rows=${spark.table("daily_txn_summary_clone").count()}")
 
     // the full declared KRE DAG through the runner (ModelRegistry):

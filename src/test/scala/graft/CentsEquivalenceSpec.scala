@@ -117,4 +117,19 @@ class CentsEquivalenceSpec extends AnyFunSuite {
       .as[java.math.BigDecimal].collect().toSeq
     assert(folded.map(BigDecimal(_)) == expected)
   }
+
+  test("a Cents long sum past Long.MaxValue raises ARITHMETIC_OVERFLOW (ANSI pinned)") {
+    // out of contract on purpose: ten DECIMAL(18,2) maxima are ~10^19
+    // cents, past Long.MaxValue ≈ 9.2×10^18 — under the pinned ANSI the
+    // long buffer must fail the query, never wrap into a wrong total
+    val max = new java.math.BigDecimal("9999999999999999.99")
+    val rows = Seq.fill(10)(max).toDF("v")
+      .withColumn("amount", $"v".cast(Money))
+    val e = intercept[Exception] {
+      rows.agg(Cents.asMoney(sum(Cents.cents($"amount")))).collect()
+    }
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(chain.exists(t => String.valueOf(t.getMessage)
+      .contains("ARITHMETIC_OVERFLOW")), e.toString)
+  }
 }

@@ -3,7 +3,7 @@ package graft
 import java.time.LocalDate
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.models.{FreqModels, TxnModels}
+import graft.models.FreqModels
 
 /** The heavy-hitters sketch tier (`functions/FreqSketch.scala`,
   * `models/FreqModels.scala`, `ModelRegistry.freqDag`): the published
@@ -16,9 +16,11 @@ class FreqSketchSpec extends AnyFunSuite {
   import spark.implicits._
 
   private val sfDir = "/root/testdata/sf0.01"
+  private def factTxn =
+    graft.runner.ModelRegistry.sessionResolver(spark, sfDir)("fact_txn")
 
   test("no false negatives above the bound; estimates within maxError") {
-    val fact = TxnModels.factTxn(spark, sfDir)
+    val fact = factTxn
     val rolled = FreqModels.rollingTopWallets(fact, 29, k = 20).cache()
     // exact rolling counts for the LAST anchor (cheap at spec scale)
     val anchor = rolled.agg(max($"date_key")).head().getDate(0)
@@ -49,7 +51,7 @@ class FreqSketchSpec extends AnyFunSuite {
   }
 
   test("merging daily sketches ≡ one pass within the error bound") {
-    val fact = TxnModels.factTxn(spark, sfDir)
+    val fact = factTxn
     // one-pass sketch over the whole fact vs merge of the daily layer
     val onePass = fact.agg(
       call_function("freq_sketch_agg", $"wallet_id").as("sk"))
@@ -96,7 +98,7 @@ class FreqSketchSpec extends AnyFunSuite {
     runner.runAll(graft.runner.ModelRegistry.kreDag.take(1) ++
       graft.runner.ModelRegistry.freqDag, sources)
     val daily = spark.read.parquet(s"$dir/daily_wallet_freq_sketches")
-    val expected = TxnModels.factTxn(spark, sfDir)
+    val expected = factTxn
       .groupBy($"date_key").agg(count(lit(1)).as("expected_n"))
     val mismatched = daily
       .join(expected, Seq("date_key"), "full_outer")

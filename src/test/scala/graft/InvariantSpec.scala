@@ -11,9 +11,11 @@ class InvariantSpec extends AnyFunSuite {
   val spark = TestSpark.spark
   import spark.implicits._
   val sfDir = "/root/testdata/sf0.001"
+  private def model(name: String) =
+    graft.runner.ModelRegistry.sessionResolver(spark, sfDir)(name)
 
   test("payout shares are in [0,1] and post-monopoly top share <= 2/3") {
-    val p = KreModels.dailyPayout(spark, sfDir).cache()
+    val p = model("daily_payout").cache()
     val bad = p.filter($"post_monopoly_share" < 0 ||
       $"post_monopoly_share" > 1 || $"pre_monopoly_share" < 0 ||
       $"pre_monopoly_share" > 1)
@@ -26,14 +28,14 @@ class InvariantSpec extends AnyFunSuite {
   }
 
   test("per-date post-monopoly shares sum to <= 1 (+rounding)") {
-    val sums = KreModels.dailyPayout(spark, sfDir)
+    val sums = model("daily_payout")
       .groupBy($"date_key")
       .agg(sum($"post_monopoly_share".cast("double")).as("s"))
     assert(sums.filter($"s" > 1.000001).count() == 0)
   }
 
   test("capped_aub <= active_users * cap and <= aub") {
-    val a = KreModels.activeUserBalance(spark, sfDir)
+    val a = model("active_user_balance")
     assert(a.filter($"capped_aub" > $"aub").count() == 0)
     assert(a.filter(
       $"capped_aub" > ($"active_users" * 1000).cast("decimal(38,2)"))
@@ -41,15 +43,15 @@ class InvariantSpec extends AnyFunSuite {
   }
 
   test("volatility factor is non-negative and average_price positive") {
-    val v = KreModels.volatilityFactor(spark, sfDir)
+    val v = model("volatility_factor")
     assert(v.filter($"volatility_factor" < 0).count() == 0)
     assert(v.filter($"average_price" <= 0).count() == 0)
   }
 
   test("rolling 7d actives >= daily actives for every day") {
-    val daily = ActivityModels.dailyDistinctWallets(spark, sfDir)
+    val daily = model("daily_distinct_wallets")
       .select($"date_key", $"active_wallets".as("d"))
-    val rolling = ActivityModels.rolling7dActive(spark, sfDir)
+    val rolling = ActivityModels.rolling7dActive(model("fact_txn"))
       .select($"date_key", $"active_wallets_7d".as("r"))
     assert(daily.join(rolling, Seq("date_key"))
       .filter($"r" < $"d").count() == 0)

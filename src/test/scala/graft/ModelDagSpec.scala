@@ -71,14 +71,18 @@ class ModelDagSpec extends AnyFunSuite {
     "fact_txn", "app_activity_grid", "closing_balance", "volatility_factor",
     "active_user_balance", "daily_payout", "weekly_payout",
     "daily_txn_summary", "daily_churn_volume", "daily_net_inflation",
-    "monthly_active_accounts", "weekly_top_apps_json", "monthly_txn_rollup",
+    "monthly_active_accounts", "monthly_active_ecosystem",
+    "weekly_top_apps_json", "monthly_txn_rollup",
     "gc_impacted_accounts", "monthly_inactive_wallets",
     "app_txn_summary_from_day", "app_txn_summary_from_week",
     "fact_creations", "creates_by_type", "daily_summary_ecosystem",
     // round-4 composites: the per-app API row (backward-looking daily +
     // monthly actives legs must make complete-day rows immutable) and
     // the weekly JSON rollup chained off weekly_payout
-    "daily_summary_by_app", "weekly_kre_payout_summary")
+    "daily_summary_by_app", "weekly_kre_payout_summary",
+    // and the KRE API row; the API rows read a monthly-actives table
+    // as a dep, so it is here too (a subset holds every model it reads)
+    "daily_kre_summary")
 
   test("incremental catch-up converges to full refresh across the DAG", SlowTest) {
     val dag = ModelRegistry.kreDag.filter(m => convergenceSubset(m.name))

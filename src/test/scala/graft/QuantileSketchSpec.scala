@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.models.{QuantileModels, TxnModels}
+import graft.models.QuantileModels
 
 /** The KLL mergeable-quantiles scale path must track the exact rolling
   * percentile within the sketch's published RANK error. KLL's contract
@@ -19,13 +19,15 @@ class QuantileSketchSpec extends AnyFunSuite {
   import spark.implicits._
 
   private val sfDir = "/root/testdata/sf0.01"
+  private def factTxn =
+    graft.runner.ModelRegistry.sessionResolver(spark, sfDir)("fact_txn")
 
   // k=200 → ~1.65% normalized rank error at 99% confidence; 0.05 leaves
   // slack for the double-rank interpolation at small window populations
   private val RankTol = 0.05
 
   test("rolling p50/p90/p99 track the exact windowed sort (30-day, per app)") {
-    val fact = TxnModels.factTxn(spark, sfDir)
+    val fact = factTxn
     val est = QuantileModels.rollingAmountQuantiles(fact, 29)
 
     // exact 30-day window populations, small enough to sort per group
@@ -94,7 +96,7 @@ class QuantileSketchSpec extends AnyFunSuite {
   }
 
   test("quantile DAG runs under the incremental runner; catch-up ≡ full") {
-    val fact = TxnModels.factTxn(spark, sfDir)
+    val fact = factTxn
     val dir = java.nio.file.Files
       .createTempDirectory("quantile-dag").toString
     val runner = new graft.runner.IncrementalRunner(spark, dir,

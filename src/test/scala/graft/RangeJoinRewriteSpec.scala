@@ -96,8 +96,8 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
   test("q29 weekly payout plans with no nested-loop join (rule not needed)") {
     // the hand-written model derives each payout row's unique served
     // Monday as a scalar (week(d+8)) — the last BNLJ in the repo, gone
-    val plan = graft.models.KreModels
-      .kreWeeklyPayout(ruled, "/root/testdata/sf0.001")
+    val plan = SparkEntry.rawQueries("q29_kre_weekly_payout")(
+        ruled, "/root/testdata/sf0.001")
       .queryExecution.executedPlan.toString
     assert(!plan.contains("BroadcastNestedLoopJoin") &&
       !plan.contains("CartesianProduct"), plan)

@@ -172,11 +172,11 @@ class SeedAndSinkSpec extends AnyFunSuite {
   test("S4: a clone is a view over the source files (no copy)") {
     val dir = Files.createTempDirectory("graft-clone").toString
     Seq((1, "a"), (2, "b")).toDF("k", "v").write.parquet(s"$dir/model")
-    graft.catalog.Tables.registerClone(spark, "model_clone", s"$dir/model")
+    graft.catalog.Tables.registerAll(spark, Seq("model_clone" -> s"$dir/model"))
     assert(spark.table("model_clone").count() == 2)
     // the clone tracks the source: append more data, the view sees it
     Seq((3, "c")).toDF("k", "v").write.mode("append").parquet(s"$dir/model")
-    graft.catalog.Tables.registerClone(spark, "model_clone", s"$dir/model")
+    graft.catalog.Tables.registerAll(spark, Seq("model_clone" -> s"$dir/model"))
     assert(spark.table("model_clone").count() == 3)
   }
 }

@@ -4,9 +4,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.models._
+import graft.runner.ModelRegistry
 
 /** Round-15 optimization pins: the shared-materialization pass changed
-  * operator INTERNALS (injected monthly-actives legs, the s08/s09
+  * operator INTERNALS (memoized monthly-actives legs, the s08/s09
   * shared pair stream, q20's folded orders legs) — this spec pins each
   * rewrite row-identical to the formulation it replaced, independent
   * of the DuckDB oracle gate (which pins values, not the equivalence
@@ -23,34 +24,27 @@ class SharedModelReuseSpec extends AnyFunSuite {
       .collect().map(_.mkString("|")).sorted.toSeq
 
   test("q40: injecting the materialized q34 rows equals deriving the monthly leg from the grid") {
-    val fact = TxnModels.factTxn(spark, sfDir)
-    val grid = CompositeModels.appActivityGrid(spark, sfDir)
-    val vf = KreModels.volatilityFactor(spark, sfDir)
-    val dim = graft.catalog.Tables.nation(spark, sfDir)
-    val derived = EcosystemModels.dailySummaryByAppFrom(fact, grid, vf, dim)
-    val injected = EcosystemModels.dailySummaryByAppFrom(fact, grid, vf, dim,
-      monthlyIn = Some(CompositeModels.monthlyActiveAccountsShared(spark, sfDir)))
-    assert(rows(injected) == rows(derived))
+    val r = ModelRegistry.sessionResolver(spark, sfDir)
+    val grid = r("app_activity_grid")
+    val fromGrid = CompositeModels.activeAccountsAppFromGrid(grid, 29)
+    assert(rows(r("monthly_active_accounts")) == rows(fromGrid))
+    val derived = EcosystemModels.dailySummaryByAppFrom(r("fact_txn"), grid,
+      fromGrid, r("volatility_factor"), r(ModelRegistry.AppDim))
+    assert(rows(r("daily_summary_by_app")) == rows(derived))
   }
 
-  test("q39/q35: the eco_active_monthly memo equals the grid-derived 30-day leg for both consumers") {
-    val fact = TxnModels.factTxn(spark, sfDir)
-    val grid = CompositeModels.appActivityGrid(spark, sfDir)
-    val vf = KreModels.volatilityFactor(spark, sfDir)
-    val memo = EcosystemModels.ecoActiveMonthly(spark, sfDir)
-    assert(rows(memo) ==
-      rows(EcosystemModels.activeEcosystemFromGrid(grid, 29)))
-    val derived = EcosystemModels.dailySummaryEcosystemFrom(fact, grid, vf)
-    val injected = EcosystemModels.dailySummaryEcosystemFrom(fact, grid, vf,
-      monthlyIn = Some(memo))
-    assert(rows(injected) == rows(derived))
-    val aub = KreModels.activeUserBalance(spark, sfDir)
-    val payout = KreModels.dailyPayout(spark, sfDir)
-    val kreDerived = CompositeModels.dailyKreSummaryFrom(
-      fact, grid, aub, vf, payout)
-    val kreInjected = CompositeModels.dailyKreSummaryFrom(
-      fact, grid, aub, vf, payout, monthlyIn = Some(memo))
-    assert(rows(kreInjected) == rows(kreDerived))
+  test("q39/q35: the monthly_active_ecosystem memo equals the grid-derived 30-day leg for both consumers") {
+    val r = ModelRegistry.sessionResolver(spark, sfDir)
+    val (fact, grid, vf) =
+      (r("fact_txn"), r("app_activity_grid"), r("volatility_factor"))
+    val fromGrid = EcosystemModels.activeEcosystemFromGrid(grid, 29)
+    assert(rows(r("monthly_active_ecosystem")) == rows(fromGrid))
+    val derived =
+      EcosystemModels.dailySummaryEcosystemFrom(fact, grid, fromGrid, vf)
+    assert(rows(r("daily_summary_ecosystem")) == rows(derived))
+    val kreDerived = CompositeModels.dailyKreSummaryFrom(fact,
+      r("active_user_balance"), vf, r("daily_payout"), fromGrid)
+    assert(rows(r("daily_kre_summary")) == rows(kreDerived))
   }
 
   test("s08/s09: the shared cell_pair_sims stream reproduces the direct cell self-join") {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.models.{CompositeModels, SketchModels, TxnModels}
+import graft.models.{CompositeModels, SketchModels}
 
 /** The HLL-sketch scale path must track the exact rolling
   * active-accounts operator within sketch error. At sf0.01
@@ -17,9 +17,11 @@ class SketchSpec extends AnyFunSuite {
   import spark.implicits._
 
   private val sfDir = "/root/testdata/sf0.01"
+  private def factTxn =
+    graft.runner.ModelRegistry.sessionResolver(spark, sfDir)("fact_txn")
 
   test("sketch MAU estimates track the exact operator (30-day, per app)") {
-    val fact = TxnModels.factTxn(spark, sfDir)
+    val fact = factTxn
     val exact = CompositeModels.activeAccountsAppFrom(fact, 29)
     val est = SketchModels.activeAccountsAppSketch(fact, 29)
     val joined = exact.join(est, Seq("date_key", "app_id"))

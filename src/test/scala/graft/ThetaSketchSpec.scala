@@ -14,13 +14,15 @@ class ThetaSketchSpec extends AnyFunSuite {
   import spark.implicits._
 
   private val sfDir = "/root/testdata/sf0.01"
+  private def factTxn =
+    graft.runner.ModelRegistry.sessionResolver(spark, sfDir)("fact_txn")
   // lgK=12 → 4096 nominal entries; RSE ≈ 1/sqrt(4096) ≈ 1.6%. Spec
   // tolerance 5× the RSE (≥5 sigma against flakiness) plus a small
   // absolute floor for near-exact small sets.
   private def tol(n: Double): Double = math.max(5.0, n * 0.08)
 
   test("weekly union estimates match exact distinct actives") {
-    val fact = TxnModels.factTxn(spark, sfDir).cache()
+    val fact = factTxn.cache()
     val weekly = RetentionModels
       .dailyWalletThetaSketches(fact)
       .groupBy(date_trunc("week", $"date_key").cast("date").as("week_start"))
@@ -39,7 +41,7 @@ class ThetaSketchSpec extends AnyFunSuite {
   }
 
   test("retention series brackets exact week-over-week intersections") {
-    val fact = TxnModels.factTxn(spark, sfDir).cache()
+    val fact = factTxn.cache()
     val series = RetentionModels.retentionSeries(fact)
       .collect()
       .map(r => r.getDate(0).toString ->
@@ -78,7 +80,7 @@ class ThetaSketchSpec extends AnyFunSuite {
     runner.runAll(graft.runner.ModelRegistry.kreDag.take(1) ++
       graft.runner.ModelRegistry.retentionDag, sources)
     val daily = spark.read.parquet(s"$dir/daily_wallet_theta_sketches")
-    val expected = TxnModels.factTxn(spark, sfDir)
+    val expected = factTxn
       .groupBy($"date_key").agg(count(lit(1)).as("expected_n"))
     val mismatched = daily
       .join(expected, Seq("date_key"), "full_outer")
@@ -118,7 +120,7 @@ class ThetaSketchSpec extends AnyFunSuite {
   }
 
   test("theta union is closed over serialized rows (merge ≡ one pass)") {
-    val fact = TxnModels.factTxn(spark, sfDir)
+    val fact = factTxn
     val onePass = fact
       .agg(call_function("theta_estimate",
         call_function("theta_sketch_agg", $"wallet_id"))).head().getDouble(0)

@@ -58,12 +58,14 @@ def main(paths):
     # queries whose steady sample reads their OWN memoized output — the
     # floor measures a ~50-row parquet read there, not the operator
     # (r15 verdict, what's-wrong #2); read their cost from floor_full.
-    memo_out = set()
-    for _, r in runs:
-        for q, tables in (r.get("materialized") or {}).items():
-            for t in tables:
-                if t.startswith(q.split("_")[0]):
-                    memo_out.add(q)
+    # A memo is a query's own output when it carries the query's name
+    # (s01_cosine_topk) or its model name, the query name minus its
+    # qNN_ prefix (q01_fact_txn <-> fact_txn) — whichever query's first
+    # sample paid the build (q26 builds q27's volatility_factor).
+    memos = {t for _, r in runs
+             for tables in (r.get("materialized") or {}).values()
+             for t in tables}
+    memo_out = {q for q in keys if {q, q.split("_", 1)[-1]} & memos}
     worst = sorted(floor.items(), key=lambda kv: -kv[1])[:15]
     for k, v in worst:
         mark = "  [memo-output: not an operator cost]" if k in memo_out else ""
